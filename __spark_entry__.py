@@ -19,78 +19,9 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from university_data_lakehouse_spark.session import tune_existing
 
 
-# The driver's CORRECTNESS gate checks the first ~50 registry keys, and
-# the registry exceeds that — so ordering is PRIORITY-BASED and the
-# window ROTATES every round: keys whose last driver row is oldest
-# register first, plus any key materially changed this round.  Keys
-# displaced past the cap are green in CORRECTNESS_r01..r05 as standing
-# proof, and EVERY key regardless of position passes the identical
-# pytest oracle gate (tests/test_oracle_parity.py).
-_PRIORITY_KEYS = (
-    # r17 rotation. Lead: the 49 keys whose last driver row is
-    # CORRECTNESS_r14 (2 rounds old, the invariant's limit) —
-    # mechanically r14 green keys minus r15-window minus r16-window,
-    # exactly the r16 earmark. tools/window_check.py enforces this
-    # ordering.
-    "dedup_simhash_incremental", "dq_benford",
-    "dq_embedding_health", "dq_ks_drift", "dq_no_duplicates",
-    "dq_not_null_pk", "dq_psi_drift", "dq_referential_integrity",
-    "dq_row_count", "dq_value_range", "gold_order_metrics",
-    "gold_revenue_analytics", "gold_status_funnel",
-    "multimodal_adpcm", "multimodal_jpeg", "multimodal_jpeg_420",
-    "multimodal_jpeg_color", "multimodal_jpeg_progressive",
-    "multimodal_mixed", "multimodal_mulaw", "olap_cube_revenue",
-    "olap_customer_abc", "olap_customer_abc_banded",
-    "olap_inactive_customers", "olap_priority_shipmode",
-    "olap_profit_by_nation", "olap_promo_revenue",
-    "olap_prospect_customers", "olap_returned_items",
-    "olap_supplier_part_counts", "olap_top_supplier",
-    "olap_waiting_suppliers", "pack_token_bins", "sample_split",
-    "sample_stratified", "sample_weighted", "silver_dim_customers",
-    "silver_dim_parts", "silver_dim_suppliers",
-    "silver_fact_contacts", "silver_fact_lineitems",
-    "silver_fact_orders", "sim_knn_lsh", "text_contamination",
-    "text_contamination_semantic", "text_fineweb_rules",
-    "text_lm_quality", "text_pii_redact", "text_repetition",
-    # Slot 50 (spare): r17 is an optimization round — no new registry
-    # key — so the spare pulls FORWARD the alphabetically-first
-    # r15-aged key (the r16 policy), trimming the r18 mandatory
-    # window to 49 + 1 spare. The r17 plan changes (scatter gating,
-    # VLC tables) don't need window slots: every key passes the
-    # identical pytest oracle gate regardless of position, and the
-    # optimization discipline proves equivalence before landing.
-    "dedup_c4_spans",
-    # r18 MUST lead with the keys whose last driver row is
-    # CORRECTNESS_r15 (mechanically r15 green minus r16-window minus
-    # r17-window —
-    # "dedup_embedding_cosine", "dedup_embedding_lsh", "dedup_exact",
-    # "dedup_minhash_lsh", "dedup_ngram_jaccard",
-    # "dedup_simhash_wide", "dq_freshness", "dq_profile",
-    # "emb_random_projection", "events_asof_join", "events_funnel",
-    # "events_retention", "events_sessionize", "events_user_stats",
-    # "events_windowed_agg", "multimodal_alaw",
-    # "multimodal_audio_stats", "multimodal_avi", "multimodal_flac",
-    # "multimodal_frame_sample", "multimodal_meta",
-    # "multimodal_mjpeg", "multimodal_mpa_subbands",
-    # "multimodal_normalize", "multimodal_png", "multimodal_y4m",
-    # "olap_basket_affinity", "olap_late_orders",
-    # "olap_local_supplier_volume", "olap_market_pivot",
-    # "olap_market_share", "olap_min_cost_supplier",
-    # "olap_price_percentiles", "olap_pricing_summary",
-    # "olap_revenue_forecast", "olap_rollup_revenue",
-    # "olap_running_revenue", "olap_shipping_priority",
-    # "olap_top_k_per_group", "sim_knn_bruteforce", "sim_knn_ivf",
-    # "sim_knn_ivfpq", "sim_knn_pq", "sim_knn_rp", "text_c4_rules",
-    # "text_fingerprint", "text_langid", "text_quality_score",
-    # "text_token_stats",
-    # ) = 49 keys + 1 spare slot for r18-changed/new keys.
-    # tools/window_check.py verifies (W5: 49 <= 50).
-)
-
-
 def _registries():
-    """Collect (QUERIES, ORACLES) from every operator module, ordered
-    priority-first (see _PRIORITY_KEYS) then module order."""
+    """Collect (QUERIES, ORACLES) from every operator module, in
+    module order."""
     from university_data_lakehouse_spark.operators import (  # noqa: PLC0415
         pipeline,
     )
@@ -111,9 +42,7 @@ def _registries():
     for mod in modules:
         queries.update(getattr(mod, "QUERIES", {}))
         oracles.update(getattr(mod, "ORACLES", {}))
-    ordered = {k: queries[k] for k in _PRIORITY_KEYS if k in queries}
-    ordered.update((k, v) for k, v in queries.items() if k not in ordered)
-    return ordered, oracles
+    return queries, oracles
 
 
 def entry(spark: SparkSession) -> DataFrame:

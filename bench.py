@@ -170,42 +170,28 @@ HIGH_VARIANCE = {"dedup_minhash_lsh", "dedup_embedding_lsh",
                  "sim_knn_ivf_rp"}
 HIGH_VARIANCE_REPEATS = 5
 
-# coverage rotation (VERDICT r11 item 7): HEADLINE times 68 of the
-# registry's keys; the rest had NO timing row anywhere, so a
-# pathological slowdown in an untimed key (a corpus_* or events_*
-# outside HEADLINE) could hide for many rounds. Each round times one
-# quarter of the non-HEADLINE keys — sorted, chunked, the chunk picked
-# by the live round number — with 1 repeat: cheap, and every registry
-# key gets a timing row at most COVERAGE_CYCLES rounds old.
-# perf_regress compares each coverage key against its newest value in
-# ANY older artifact (consecutive rounds time disjoint quarters).
-COVERAGE_CYCLES = 4
+# coverage (VERDICT r11 item 7): HEADLINE times 68 of the registry's
+# keys; the rest had NO timing row anywhere, so a pathological
+# slowdown in an untimed key (a corpus_* or events_* outside HEADLINE)
+# could hide. Every bench times each non-HEADLINE key once — cheap,
+# and every registry key has a timing row in every artifact.
 COVERAGE_REPEATS = 1
 
 # Documented quadratic-by-construction baselines (each names its
 # scale-killer and in-registry production sibling in its docstring).
 # Their coverage cost is by construction, not a pathology signal —
-# cycle 0 spent 42s of its 72s total on two of them (VERDICT r12
-# What's wrong #2) and the section runs every round forever, so they
-# are timed at sf0.01 instead of the bench SF: still a timing row
-# (a blowup would show — their sf0.01 cost is well under a second),
-# but the section's budget stays ~O(core) as cycles rotate. The cap
-# is recorded in the artifact ("capped_sf001") — never silent.
+# two of them took 42s of a 72s coverage section (VERDICT r12 What's
+# wrong #2) and the section runs on every bench, so they are timed at
+# sf0.01 instead of the bench SF: still a timing row (a blowup would
+# show — their sf0.01 cost is well under a second), but the section's
+# budget stays ~O(core). The cap is recorded in the artifact
+# ("capped_sf001") — never silent.
 COVERAGE_CAP_SF001 = {"dedup_embedding_cosine", "dedup_ngram_jaccard",
                       "dedup_simhash"}
 
 
-def coverage_keys(queries: dict, rnd: int) -> list[str]:
-    # stable per-key hash assignment (ADVICE r12): positional
-    # chunking of sorted(rest) shifted EVERY chunk boundary whenever
-    # one key was added or removed, silently skipping keys' cycles;
-    # crc32 % CYCLES pins each key to its quarter forever, so
-    # registry growth only affects the new key's own quarter.
-    import zlib  # noqa: PLC0415
-    rest = sorted(set(queries) - set(HEADLINE))
-    i = rnd % COVERAGE_CYCLES
-    return [k for k in rest
-            if zlib.crc32(k.encode()) % COVERAGE_CYCLES == i]
+def coverage_keys(queries: dict) -> list[str]:
+    return sorted(set(queries) - set(HEADLINE))
 
 
 # skew section (VERDICT r6 #8): the skew-sensitive operators timed on
@@ -424,29 +410,23 @@ def main() -> None:
             "total": round(sum(huge.values()), 3),
         }
 
-    # rotating coverage quarter of the non-HEADLINE keys (see
-    # coverage_keys above) — single repeat, informational. Runs LAST,
-    # after every comparable section: its heavy one-off jobs (the
-    # all-pairs baselines live here) perturb JVM heap/GC state, and
-    # running it mid-bench in the first r12 pass inflated the
-    # downstream sf1 section 1.4-2.4x on untouched keys while the
-    # pre-coverage sections stayed flat — section order is part of
-    # the round-over-round comparability contract.
-    from tools.roundinfo import round_state  # noqa: PLC0415
-    rnd = round_state().round
-    cov_keys = coverage_keys(queries, rnd)
+    # every non-HEADLINE key (see coverage_keys above) — single
+    # repeat, informational. Runs LAST, after every comparable
+    # section: its heavy one-off jobs (the all-pairs baselines live
+    # here) perturb JVM heap/GC state, and running it mid-bench in the
+    # first r12 pass inflated the downstream sf1 section 1.4-2.4x on
+    # untouched keys while the pre-coverage sections stayed flat —
+    # section order is part of the run-over-run comparability contract.
+    cov_keys = coverage_keys(queries)
     capped = sorted(set(cov_keys) & COVERAGE_CAP_SF001
                     if os.path.isdir(scale_dir) else set())
-    print(f"# coverage quarter r{rnd} (cycle {rnd % COVERAGE_CYCLES}): "
-          f"{len(cov_keys)} keys; sf0.01-capped baselines: {capped}",
-          file=sys.stderr)
+    print(f"# coverage: {len(cov_keys)} keys; sf0.01-capped baselines: "
+          f"{capped}", file=sys.stderr)
     coverage = {k: time_key(k, scale_dir if k in capped else sf_dir,
                             COVERAGE_REPEATS)[0]
                 for k in cov_keys}
     if coverage:
         out["coverage"] = {
-            "round": rnd,
-            "cycle": rnd % COVERAGE_CYCLES,
             "repeats": COVERAGE_REPEATS,
             "queries": coverage,
             "capped_sf001": capped,

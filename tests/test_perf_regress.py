@@ -102,15 +102,8 @@ def test_coverage_keys_partition_the_non_headline_registry():
 
     queries = entry_mod.queries()
     rest = set(queries) - set(bench.HEADLINE)
-    seen: list[str] = []
-    for rnd in range(bench.COVERAGE_CYCLES):
-        chunk = bench.coverage_keys(queries, rnd)
-        assert not set(chunk) & set(seen)      # disjoint quarters
-        seen += chunk
-    assert set(seen) == rest                   # full coverage per cycle
-    # the quarter is cheap by construction: ~20 keys/round
-    assert max(len(bench.coverage_keys(queries, r))
-               for r in range(bench.COVERAGE_CYCLES)) <= 25
+    # every non-HEADLINE key exactly once, and no HEADLINE key
+    assert bench.coverage_keys(queries) == sorted(rest)
 
 
 def test_high_variance_copy_matches_bench():

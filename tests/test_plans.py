@@ -67,7 +67,7 @@ def test_failed_check_blocks_downstream(spark, sf_dir):
     assert res["c"].status == "ok"
 
 
-def test_checks_pass_and_fail(spark, sf_dir):
+def test_checks_pass_and_fail(spark, sf_dir, tmp_path):
     df = spark.createDataFrame(
         [(1, 10.0, dt.datetime(2024, 1, 1)), (2, -5.0, dt.datetime(2024, 1, 2)),
          (2, 3.0, None)],
@@ -84,6 +84,30 @@ def test_checks_pass_and_fail(spark, sf_dir):
     assert not ok
     ok, meta = freshness("ts", 24.0, now=dt.datetime(2024, 1, 2, 12))(df)
     assert ok and meta["age_hours"] == pytest.approx(12.0)
+
+    # the same checks fused into one asset — one aggregate over the
+    # cached frame, or over the staged files with a catalog — give the
+    # verdicts and metadata of each factory called alone
+    from university_data_lakehouse_spark.plans.checks import accepted_values
+    from university_data_lakehouse_spark.tables import TableCatalog
+
+    checks = (
+        ("not_null_pk", not_null_pk("id")),
+        ("no_duplicates", no_duplicates("id")),
+        ("row_count", row_count(3)),
+        ("value_range", value_range("v", 0.0, 100.0)),
+        ("referential_integrity", referential_integrity("id", parent, "id")),
+        ("completeness", completeness("ts", 0.9)),
+        ("freshness", freshness("ts", 24.0, now=dt.datetime(2024, 1, 2, 12))),
+        ("accepted_values", accepted_values("id", [1])),
+    )
+    alone = {name: check(df) for name, check in checks}
+    g = AssetGraph([Asset("fused", lambda s, d: df, checks=checks)])
+    for catalog in (None, TableCatalog(str(tmp_path / "wh"))):
+        r = g.materialize(spark, sf_dir, catalog=catalog)["fused"]
+        assert r.status == "check_failed" and r.rows == 3
+        assert r.checks == {n: ok for n, (ok, _) in alone.items()}
+        assert r.check_meta == {n: meta for n, (_, meta) in alone.items()}
 
 
 def test_selection_dsl():
@@ -400,6 +424,77 @@ def test_dlt_style_expectations_warn_drop_fail(spark, sf_dir, tmp_path):
     assert res["a"].expectations == {"v_complete": 3}
     assert res["b"].status == "skipped"
     assert "a" not in cat2.tables()        # nothing published
+    _assert_abandoned(cat2.table("a"))
+
+    # a drop expectation, then a check failing on the 7 staged rows:
+    # the staged files are abandoned, not published
+    audit_graph = AssetGraph([
+        Asset(key="a", fn=src,
+              expectations=(("v_not_null", "v IS NOT NULL", "drop"),),
+              checks=(("row_count", row_count(8)),)),
+        Asset(key="b", fn=lambda s, d, **dep: dep["a"], deps=("a",)),
+    ])
+    cat3 = TableCatalog(str(tmp_path / "wh3"))
+    res = audit_graph.materialize(spark, sf_dir, catalog=cat3)
+    assert res["a"].status == "check_failed" and res["a"].rows == 7
+    assert res["a"].check_meta == {"row_count": {"rows": 7, "min_rows": 8}}
+    assert res["b"].status == "skipped"
+    _assert_abandoned(cat3.table("a"))
+
+
+def _assert_abandoned(table):
+    """No manifest and no data file: a failed audit published nothing
+    and left no staged file behind."""
+    import glob
+    import os
+
+    assert not table.exists()
+    assert not glob.glob(os.path.join(table.log_dir, "v*.json"))
+    assert [f for _, _, fs in os.walk(table.data_dir) for f in fs] == []
+
+
+def _jobs_in_group(spark, group: str, run) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_medallion_materialization_job_budget(spark, sf_dir, tmp_path):
+    """Write–audit–publish: each asset is one staged write plus at most
+    one fused check aggregate, so a warm materialization of the
+    16-asset medallion graph stays within 4 jobs per asset. Checks
+    wrapped with functools.wraps (as a tracer wraps them) still fuse:
+    the wrapped graph runs exactly as many jobs."""
+    import dataclasses
+    import functools
+
+    from university_data_lakehouse_spark.tables import TableCatalog
+
+    def wrap(fn):
+        @functools.wraps(fn)
+        def traced(*args, **kwargs):
+            return fn(*args, **kwargs)
+        return traced
+
+    g = medallion_graph()
+    wrapped = AssetGraph([
+        dataclasses.replace(a, checks=tuple((n, wrap(c)) for n, c in a.checks))
+        for a in g.assets.values()])
+    jobs = {}
+    for name, graph in (("cold", g), ("warm", g), ("wrapped", wrapped)):
+        def run(graph=graph, name=name):
+            res = graph.materialize(spark, sf_dir,
+                                    catalog=TableCatalog(str(tmp_path / name)))
+            assert len(res) == 16
+            assert all(r.status == "ok" for r in res.values()), res
+        jobs[name] = _jobs_in_group(spark, f"job-budget-{name}", run)
+    assert jobs["warm"] <= 4 * 16, jobs
+    assert jobs["wrapped"] == jobs["warm"], jobs
 
 
 def test_volume_anomaly_flags_row_count_drift(spark, sf_dir, tmp_path):

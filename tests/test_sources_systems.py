@@ -126,3 +126,40 @@ def test_csv_and_json_landing_formats(spark, sf_dir, tmp_path):
     assert landing.tick("api_json")["orders"] == n
     # cursor semantics hold for the text formats too: re-tick is a no-op
     assert landing.tick("api_json")["orders"] == 0
+
+
+def test_load_table_infers_each_file_version_once(spark, tmp_path):
+    """load_table infers a file's schema once per (path, mtime, size):
+    a repeat load runs no Spark job, and a rewritten file is inferred
+    anew."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from university_data_lakehouse_spark.sources.loader import load_table
+
+    path = tmp_path / "region.parquet"
+
+    def write(key_type):
+        pq.write_table(pa.table({
+            "r_regionkey": pa.array([0, 1], type=key_type),
+            "r_name": ["AFRICA", "AMERICA"], "r_comment": ["a", "b"],
+        }), path)
+
+    write(pa.int64())
+    first = load_table(spark, str(tmp_path), "region")
+    sc = spark.sparkContext
+    sc.setJobGroup("load-table-memo", "load-table-memo")
+    try:
+        again = load_table(spark, str(tmp_path), "region")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("load-table-memo") == []
+    assert again.schema == first.schema and again.count() == 2
+
+    write(pa.int32())
+    os.utime(path, ns=(1, 1))        # a new file version whatever the clock
+    rewritten = load_table(spark, str(tmp_path), "region")
+    assert rewritten.schema["r_regionkey"].dataType == T.IntegerType()
+    assert rewritten.count() == 2

@@ -8,6 +8,7 @@ the equivalent guarantees of tables/format.py."""
 
 from __future__ import annotations
 
+import glob
 import os
 
 import pytest
@@ -197,9 +198,45 @@ def test_failed_check_not_committed(spark, sf_dir, catalog, tmp_path):
         checks=(("not_null_pk", lambda df: (
             df.where(F.col("pk").isNull()).count() == 0, {})),),
     )
-    res = AssetGraph([bad]).materialize(spark, str(tmp_path), catalog=catalog)
+    child = Asset(key="gold/child", deps=("silver/bad",),
+                  fn=lambda spark, sf_dir, **deps: deps["silver/bad"])
+    res = AssetGraph([bad, child]).materialize(spark, str(tmp_path),
+                                               catalog=catalog)
     assert res["silver/bad"].status == "check_failed"
-    assert not catalog.table("silver/bad").exists()
+    assert res["gold/child"].status == "skipped"
+    t = catalog.table("silver/bad")
+    assert not t.exists()
+    assert not glob.glob(os.path.join(t.log_dir, "v*.json"))
+    # the staged files were abandoned, not left behind
+    assert [f for _, _, fs in os.walk(t.data_dir) for f in fs] == []
+
+
+def test_custom_check_audits_the_staged_files(spark, catalog, tmp_path):
+    """A plain callable check reads the staged files — exactly the rows
+    a commit publishes — and a passing audit publishes those files."""
+    from university_data_lakehouse_spark.plans.assets import Asset, AssetGraph
+    from university_data_lakehouse_spark.plans.checks import row_count
+
+    seen = {}
+
+    def spy(df):
+        seen["files"] = {f.removeprefix("file://").removeprefix("file:")
+                         for f in df.inputFiles()}
+        seen["rows"] = df.count()
+        return True, {}
+
+    asset = Asset(
+        key="silver/spy",
+        fn=lambda spark, sf_dir: spark.range(5).withColumnRenamed("id", "pk"),
+        checks=(("spy", spy), ("row_count", row_count(5))),
+    )
+    res = AssetGraph([asset]).materialize(spark, str(tmp_path),
+                                          catalog=catalog)
+    assert res["silver/spy"].status == "ok" and res["silver/spy"].rows == 5
+    t = catalog.table("silver/spy")
+    assert seen["files"] == {os.path.join(t.data_dir, *f["name"].split("/"))
+                             for f in t.manifest()["files"]}
+    assert seen["rows"] == 5
 
 
 def test_merge_skips_files_outside_key_range(spark, catalog):

@@ -18,7 +18,6 @@ columns whose Python payload types differ (Decimal vs str vs list).
 Exit 1 on any hazard.
 
 Usage: python tools/dtype_audit.py [--sf-dir DIR] [--keys k1,k2,...]
-       [--window]    (only the 50 keys the next driver run will check)
 """
 
 from __future__ import annotations
@@ -91,19 +90,11 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
     ap.add_argument("--keys", default=None)
-    ap.add_argument("--window", action="store_true")
     args = ap.parse_args()
 
     import __spark_entry__ as entry_mod  # noqa: PLC0415
     if args.keys:
         keys = args.keys.split(",")
-    elif args.window:
-        # the driver's window is the first WINDOW keys of queries()
-        # itself — NOT _PRIORITY_KEYS, which may carry a stale
-        # non-registry name that queries() drops (the r10 ghost-key
-        # class); slicing the registry matches what the driver runs
-        from tools.window_check import WINDOW  # noqa: PLC0415
-        keys = list(entry_mod.queries())[:WINDOW]
     else:
         keys = list(entry_mod.queries())
 

@@ -2,9 +2,8 @@
 
 The judge compares BENCH_r{N}_local.json to the previous round's
 artifact by hand each round ("no common-key regression >1.4x"). This
-tool makes that check mechanical so the builder sees a regression
-BEFORE shipping, in the same spirit as window_check (rotation) and
-round_check (artifact freshness).
+tool makes that check mechanical so a regression shows BEFORE
+shipping.
 
 Per section (sf0.1 headline, sf1_synth, sf10_synth), every key present
 in both rounds is compared:
@@ -29,12 +28,11 @@ and committed adjudications downgrade a matching flag for ONE round up
 to the recorded ratio (see load_adjudications).
 
 Exit 1 iff a non-high-variance key is flagged in a gating section, OR
-the round being built has no artifact pair yet (the gate's failure
-mode must never be a silent pass), so the builder's end-of-round
-chain (pytest && bench && copy-artifact && perf_regress &&
-round_check) stops on a real regression.
+round N has no artifact pair (the gate's failure mode must never be a
+silent pass), so a chain (pytest && bench && copy-artifact &&
+perf_regress) stops on a real regression.
 
-Usage: python tools/perf_regress.py [--round N] [--threshold 1.4]
+Usage: python tools/perf_regress.py --round N [--threshold 1.4]
 """
 
 from __future__ import annotations
@@ -244,24 +242,12 @@ def downgrade(rows: list[dict], cur_n: int, adjudications: dict,
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--round", type=int, default=None)
+    ap.add_argument("--round", type=int, required=True)
     ap.add_argument("--threshold", type=float, default=1.4)
     args = ap.parse_args()
 
     rounds = _local_rounds()
-    # anchor to the LIVE round (tools/roundinfo.py — post-round aware,
-    # same rule as round_check/window_check) — defaulting to
-    # max(rounds) would silently compare the two PREVIOUS rounds'
-    # shipped artifacts when this round's copy of bench_full.json
-    # hasn't happened yet, and the gate's failure mode must never be
-    # a silent pass; the old max(CORRECTNESS)+1 rule instead demanded
-    # an artifact for a round nobody had started whenever it ran just
-    # after the driver dropped its end-of-round files (r11 nit)
-    if args.round is not None:
-        cur_n = args.round
-    else:
-        from tools.roundinfo import round_state  # noqa: PLC0415
-        cur_n = round_state(REPO).round
+    cur_n = args.round
     prev_candidates = [n for n in rounds if n < cur_n]
     if cur_n not in rounds or not prev_candidates:
         print(f"perf_regress: NOT READY — no artifact pair for round "

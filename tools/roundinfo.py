@@ -1,25 +1,19 @@
-"""Single source of truth for "which round is this?" across the
-process tools (window_check, round_check, perf_regress).
+"""Single source of truth for "which round is this?" for the
+end-of-round artifact gate (tools/round_check.py).
 
-Three tools previously inferred the round independently as
-``max(CORRECTNESS_r*.json) + 1`` and all misbehaved in the same
-inter-round state (VERDICT r11, What's wrong #1/#3): the moment the
-driver drops round N's (still-untracked) CORRECTNESS file, "+1" jumps
-to N+1 even though the live ``_PRIORITY_KEYS`` window and the bench
-artifacts still belong to round N — window_check projected a phantom
-W2 breach and perf_regress printed NOT-READY for a round nobody had
-started.  The missing concept is the POST-ROUND state, detectable from
-git alone:
+Inferring the round as ``max(CORRECTNESS_r*.json) + 1`` misbehaves in
+the inter-round state (VERDICT r11, What's wrong #1/#3): the moment
+round N's (still-untracked) CORRECTNESS file lands, "+1" jumps
+to N+1 even though the bench artifacts still belong to round N, and a
+gate re-run demands artifacts for a round nobody had started.  The
+missing concept is the POST-ROUND state, detectable from git alone:
 
   post-round  = the newest CORRECTNESS artifact landed and NO engine
                 input (bench.py, __spark_entry__.py, the package,
                 tools/) has changed since — committed or uncommitted.
-                The live round is N (just finished); the next window
-                has not been laid yet.
+                The live round is N (just finished).
   mid-round   = engine work exists after the newest artifact (the
-                builder has started round N+1; the very first commit
-                is supposed to be the window rotation, and
-                window_check's W2 projection enforces exactly that).
+                builder has started round N+1).
 
 ``round_state()`` returns (newest_recorded, post_round, round): the
 ``round`` field is what every consumer should use — N in post-round
@@ -57,11 +51,10 @@ def _git(repo: str, *args: str) -> str:
 def correctness_files(repo: str = REPO) -> dict[int, str]:
     """Round number -> CORRECTNESS filename, from the working tree.
 
-    Working-tree listing (not git ls-files) is deliberate: the
-    driver's just-dropped untracked file is exactly the signal that
-    flips ``post_round`` — hiding it would re-create the r11 phantom-
-    W2 bug in the opposite direction (a stale mid-round projection
-    against a window that already ran)."""
+    Working-tree listing (not git ls-files) is deliberate: a
+    just-landed untracked file is exactly the signal that flips
+    ``post_round`` — hiding it would report mid-round for a round
+    that already finished."""
     out: dict[int, str] = {}
     for name in os.listdir(repo):
         m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", name)
@@ -76,10 +69,8 @@ def round_state(repo: str = REPO) -> RoundState:
         return RoundState(0, False, 1)
     n = max(files)
 
-    # uncommitted engine edits: the builder is working — mid-round,
-    # whatever the artifact's git state (this is the forcing function:
-    # a builder who starts engine work before rotating the window sees
-    # the W2 projection immediately)
+    # uncommitted engine edits: the next round's work has started —
+    # mid-round, whatever the artifact's git state
     if _git(repo, "status", "--porcelain", "--", *ENGINE_INPUTS):
         return RoundState(n, False, n + 1)
 

@@ -60,9 +60,8 @@ rational formula:
   window, so silent-frame constructions stay exact even if synthesis
   is ever added.
 
-Hence a future registry key (earmarked r12 — the r11 driver window is
-full at 50 slots; window_check.py enforces that new keys take window
-slots in their first round) can be fully DuckDB-oracle-checked: frame
+Hence a future registry key (earmarked r12) can be fully
+DuckDB-oracle-checked: frame
 geometry from the header arithmetic (Layer I slots = 12·bitrate/fs,
 slot = 4 bytes, + padding), subband values from the closed form above.
 

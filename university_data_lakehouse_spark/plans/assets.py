@@ -19,6 +19,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .checks import evaluate_checks
+
 
 @dataclass(frozen=True)
 class Asset:
@@ -117,12 +119,30 @@ class AssetGraph:
         """Run assets in dependency order; a failed blocking check
         skips everything downstream (reference blocking semantics).
 
-        With a ``catalog`` (tables.TableCatalog), every asset that
-        passes its checks is committed as a managed-table version —
-        the engine's twin of the reference's per-asset Iceberg CTAS
-        (``trino_iceberg_transform_component.py:116``). Check-failed
-        assets are NOT committed, so the published table always holds
-        the last good version.
+        With a ``catalog`` (tables.TableCatalog) every asset goes
+        through write–audit–publish, the engine's twin of the
+        reference's per-asset Iceberg CTAS gated by blocking checks
+        (``trino_iceberg_transform_component.py:116-129, 192-206``):
+
+        1. stage — the asset frame (after expectations) is written
+           straight to uniquely named table files, invisible to
+           readers: the asset's one Spark execution, no cache and no
+           count;
+        2. audit — the row count comes from the staged files' parquet
+           footers, and every check spec of ``plans/checks.py`` is
+           answered by ONE aggregate over the staged files (none at
+           all for ``row_count``); plain callable checks then run on
+           the same staged read, i.e. on exactly the rows a commit
+           would publish;
+        3. publish or abandon — passing assets commit a new table
+           version; a failed check deletes the staged files, so the
+           published table keeps its last good version.
+
+        Downstream assets receive the read of the published files.
+        Without a catalog each asset frame is cached and the same
+        check evaluation (with a ``count(1)`` fused into its
+        aggregate) runs once over the cache; the caches are released
+        when the run ends.
 
         With a ``lineage_send`` callable ``(path, payload) -> None``,
         each successfully-materialized asset's dependency edges are
@@ -163,38 +183,44 @@ class AssetGraph:
                 results[key] = AssetResult(key, "skipped")
                 continue
             asset = self.assets[key]
+            audited = None
+
+            def audit(frame, rows=None):
+                # frame: the staged read (catalog) or the cached frame
+                nonlocal audited
+                audited = (frame, *evaluate_checks(frame, asset.checks, rows))
+                return all(ok for ok, _ in audited[2].values())
+
             try:
                 dep_dfs = {d: materialized[d] for d in asset.deps if d in materialized}
                 df = asset.fn(spark, sf_dir, **dep_dfs) if dep_dfs else asset.fn(spark, sf_dir)
                 df, exp_metrics, exp_failed = self._apply_expectations(
                     asset, df)
-                df = df.cache()
-                rows = df.count()
+                if catalog is None:
+                    df = df.cache()
+                    materialized[key] = df
+                if catalog is None or exp_failed:
+                    # a failing expectation blocks the asset: nothing
+                    # is staged, but its checks still report
+                    passed = audit(df)
+                else:
+                    passed = catalog.write(key, df, mode="overwrite",
+                                           _audit=audit) is not None
             except Exception as e:  # noqa: BLE001 — orchestrator boundary
                 results[key] = AssetResult(key, "error", error=str(e)[:500])
                 blocked |= self.downstream_of(key)
                 continue
-            check_outcomes: dict[str, bool] = {}
-            check_meta: dict[str, dict] = {}
-            failed = exp_failed
-            for name, check in asset.checks:
-                ok, meta = check(df)
-                check_outcomes[name] = ok
-                check_meta[name] = meta
-                failed = failed or not ok
-            materialized[key] = df
-            if failed:
-                results[key] = AssetResult(key, "check_failed", rows,
-                                           check_outcomes,
-                                           expectations=exp_metrics,
-                                           check_meta=check_meta)
-                blocked |= self.downstream_of(key)
+            frame, rows, outcomes = audited
+            ok = passed and not exp_failed
+            results[key] = AssetResult(
+                key, "ok" if ok else "check_failed", rows,
+                {name: verdict for name, (verdict, _) in outcomes.items()},
+                expectations=exp_metrics,
+                check_meta={name: meta for name, (_, meta) in outcomes.items()})
+            if ok:
+                materialized[key] = frame
             else:
-                if catalog is not None:
-                    catalog.write(key, df, mode="overwrite")
-                results[key] = AssetResult(key, "ok", rows, check_outcomes,
-                                           expectations=exp_metrics,
-                                           check_meta=check_meta)
+                blocked |= self.downstream_of(key)
 
     @staticmethod
     def _apply_expectations(asset: Asset, df: DataFrame):

@@ -11,10 +11,16 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from .registry import SOURCE_REGISTRY
 
 TABLES = tuple(SOURCE_REGISTRY)
+
+#: inferred parquet schema per (path, st_mtime_ns, st_size): inference
+#: reads footers in a Spark job, once per ``spark.read.parquet`` call,
+#: and a medallion pass loads the same seven files 29 times
+_SCHEMAS: dict[tuple[str, int, int], T.StructType] = {}
 
 
 def table_path(sf_dir: str, name: str) -> str:
@@ -24,7 +30,7 @@ def table_path(sf_dir: str, name: str) -> str:
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in SOURCE_REGISTRY:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    df = spark.read.parquet(table_path(sf_dir, name))
+    df = _read_parquet(spark, table_path(sf_dir, name))
     # Normalize timestamp physical encodings to session-tz (UTC)
     # TIMESTAMP so downstream exprs (unix_micros, window ranges) see
     # one type regardless of how the parquet writer encoded time:
@@ -49,6 +55,24 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif kind == "timestamp_ntz":
             df = df.withColumn(f.name, df[f.name].cast("timestamp"))
     return df
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema only the
+    first time it sees this version of the file; later reads pass the
+    memoised schema. Paths ``os.stat`` cannot see (object stores)
+    infer every time."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    key = (path, st.st_mtime_ns, st.st_size)
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        _SCHEMAS[key] = df.schema
+        return df
+    return spark.read.schema(schema).parquet(path)
 
 
 def scatter(df: DataFrame, min_parts: int | None = None,

@@ -43,6 +43,7 @@ Reference parity: replaces the Iceberg CTAS materialization at
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import json
 import os
@@ -51,6 +52,7 @@ import shutil
 import time
 import urllib.parse
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -509,6 +511,12 @@ class ManagedTable:
         shutil.rmtree(tmp, ignore_errors=True)
         return staged
 
+    def _abandon(self, staged: list[dict]) -> None:
+        """Delete staged files no manifest will ever reference."""
+        for f in staged:
+            with contextlib.suppress(FileNotFoundError):
+                os.unlink(os.path.join(self.data_dir, *f["name"].split("/")))
+
     def _commit(self, version: int, action: dict) -> None:
         os.makedirs(self.log_dir, exist_ok=True)
         tmp = os.path.join(self.log_dir, f".tmp-{uuid.uuid4().hex}")
@@ -593,7 +601,8 @@ class ManagedTable:
         partition_by: list[str] | None = None,
         constraints: dict[str, str] | None = None,
         bloom_filter_columns: list[str] | None = None,
-    ) -> int:
+        _audit: Callable[[DataFrame, int], bool] | None = None,
+    ) -> int | None:
         """ACID append/overwrite; returns the committed version.
 
         ``partition_by`` (identity columns, set on first write and
@@ -603,7 +612,14 @@ class ManagedTable:
         inherited) are CHECK-enforced on every incoming frame.
         ``bloom_filter_columns`` (set on first write and inherited)
         get parquet bloom filters in every staged file — row-group
-        point-lookup skipping for hash-distributed keys."""
+        point-lookup skipping for hash-distributed keys.
+
+        ``_audit`` is the asset graph's write–audit–publish hook: it is
+        called between staging and commit with the read of the staged
+        files and their footer row count. False abandons the write —
+        the staged files are deleted, no version is published, and
+        None is returned; an exception abandons it too, then
+        propagates."""
         if mode not in ("overwrite", "append"):
             raise ValueError(f"mode {mode!r}")
         blooms = (self.bloom_filter_columns() if self.exists()
@@ -635,6 +651,18 @@ class ManagedTable:
         schema = self._check_schema(df, evolve)
         staged = self._stage(df, partition_by=pby or None,
                              bloom_filters=blooms or None)
+        if _audit is not None:
+            try:
+                publish = _audit(
+                    self._read_files(df.sparkSession, staged, schema,
+                                     partitioned=bool(pby)),
+                    sum(f["rows"] for f in staged))
+            except BaseException:
+                self._abandon(staged)
+                raise
+            if not publish:
+                self._abandon(staged)
+                return None
         base = self._versions()
         version = (base[-1] + 1) if base else 1
         removed: list[str] = []
