@@ -460,7 +460,8 @@ def emit(out: dict, full_path: str | None = None) -> None:
     # must NEVER disappear from the line. Shrink the ENCODING instead,
     # least-informative-field-first: drop the non-contract extras one
     # by one (full → n_queries → sf1_core_total → core_total), then
-    # fall back to 1-decimal medians. Only if even that overflows,
+    # fall back to 1-decimal medians that keep only the "full"
+    # sidecar pointer. Only if even that overflows,
     # replace the whole dict with {} + "queries_in" — complete-or-
     # absent, never silently partial. Budget: the capture tail is
     # exactly 2000 chars and this line is physically LAST in it —
@@ -488,7 +489,7 @@ def emit(out: dict, full_path: str | None = None) -> None:
 
     candidates = [encode(2, extras_order[i:])
                   for i in range(len(extras_order) + 1)]
-    candidates += [encode(1, extras_order), encode(1, [])]
+    candidates += [encode(1, extras_order), encode(1, ["full"])]
     for line in candidates:
         if len(line) <= budget:
             break

@@ -70,16 +70,31 @@ def test_oversized_result_is_complete_or_absent(tmp_path):
     # 200 long-named keys cannot fit even at 1 decimal: the line must
     # carry an EMPTY queries dict plus the sidecar pointer — never a
     # silently partial dict (partial reads as dropped queries).
-    out = {"metric": "headline_total_runtime", "value": 1.0,
-           "core_total": 0.5, "sf": 0.1,
-           "queries": {f"a_very_long_operator_name_{i:04d}": float(i)
-                       for i in range(200)}}
-    d, n, sidecar = _emit(out, tmp_path)
-    assert n <= 1900
-    assert d["queries"] == {} and d["n_queries"] == 200
-    assert d["queries_in"] == "bench_full.json"
-    # the byte-complete artifact still has every key
-    assert json.loads(sidecar.read_text())["queries"] == out["queries"]
+    huge = {"metric": "headline_total_runtime", "value": 1.0,
+            "core_total": 0.5, "sf": 0.1,
+            "queries": {f"a_very_long_operator_name_{i:04d}": float(i)
+                        for i in range(200)}}
+    # 60 keys that fit only in the last shrink tier: 1-decimal
+    # medians with every extra dropped except the "full" pointer
+    tight = {"metric": "headline_total_runtime", "value": 1.0,
+             "core_total": 0.5, "sf": 0.1,
+             "queries": {"q" * 19 + f"{i:03d}": i + 0.25
+                         for i in range(60)}}
+    for out in (huge, tight):
+        d, n, sidecar = _emit(out, tmp_path)
+        assert n <= 1900
+        # every line points at the sidecar, whichever tier emitted it
+        assert "bench_full.json" in (d.get("full"), d.get("queries_in"))
+        # the byte-complete artifact still has every key
+        assert json.loads(sidecar.read_text())["queries"] == out["queries"]
+        if out is huge:
+            assert d["queries"] == {} and d["n_queries"] == 200
+            assert d["queries_in"] == "bench_full.json"
+        else:
+            assert d["queries"] == {k: round(v, 1)
+                                    for k, v in out["queries"].items()}
+            assert d["full"] == "bench_full.json"
+            assert "n_queries" not in d and "core_total" not in d
 
 
 def test_line_parses_out_of_a_2000_char_tail(tmp_path):

@@ -15,6 +15,7 @@ import pytest
 
 from university_data_lakehouse_spark.operators import flac_codec as fc
 from university_data_lakehouse_spark.operators import multimodal as mm
+from university_data_lakehouse_spark.operators.bitio import VlcTable
 
 
 # ------------------------------------------------------------- FLAC
@@ -154,18 +155,25 @@ def test_mpeg1_dc_only_scalar_equals_matmul():
 
 # ------------------------------------------- r17: VLC prefix tables
 
+def _walk_only(tbl: VlcTable) -> VlcTable:
+    """Copy of ``tbl`` whose LUT never hits, so every decode() takes
+    the bit-by-bit walk."""
+    slow = VlcTable(tbl, tbl.name)
+    slow.lut = [None] * len(tbl.lut)
+    return slow
+
+
 def test_jpeg_huff_lut_equals_per_bit_walk():
-    """Decoding with the peek-11 prefix LUT must be bit-identical to
-    the legacy per-bit walk — forced by stripping the _HuffTable
-    wrapper (plain dicts take the fallback path) — across baseline,
-    4:2:0, progressive and MJPEG payloads."""
+    """Decoding with the peek LUT must be bit-identical to the per-bit
+    walk — forced by swapping every parsed table for a walk-only copy
+    — across baseline, 4:2:0, progressive and MJPEG payloads."""
     orig = mm._parse_dht
 
-    def plain(seg, dc_tabs, ac_tabs):
+    def walk(seg, dc_tabs, ac_tabs):
         orig(seg, dc_tabs, ac_tabs)
         for d in (dc_tabs, ac_tabs):
             for k in d:
-                d[k] = dict(d[k])            # drops .lut
+                d[k] = _walk_only(d[k])
 
     for i in (0, 7, 1234, 4999):
         for synth, decode in (
@@ -179,7 +187,7 @@ def test_jpeg_huff_lut_equals_per_bit_walk():
         ):
             p = synth(i)
             fast = decode(p)
-            mm._parse_dht = plain
+            mm._parse_dht = walk
             try:
                 slow = decode(p)
             finally:
@@ -212,18 +220,18 @@ def test_jpeg_dht_memo_returns_equal_tables():
     for a, b in ((dc1, dc2), (ac1, ac2)):
         assert a == b
         for tbl in a.values():
-            assert isinstance(tbl, mm._HuffTable)
+            assert isinstance(tbl, VlcTable)
+            k = tbl.width
             for (code, length), sym in tbl.items():
-                if length <= mm._HUFF_PEEK:
-                    idx = code << (mm._HUFF_PEEK - length)
-                    assert tbl.lut[idx] == (length << 8) | sym
+                if length <= k:
+                    assert tbl.lut[code << (k - length)] == (sym, length)
 
 
 def test_mpeg1_luts_equal_walk_tables():
-    """Every LUT entry must agree with the table the per-bit walk
-    consults, and every code must be reachable: probe all 2^k
-    prefixes and cross-check against a reference longest... shortest
-    prefix scan of the decode dicts."""
+    """Every LUT entry must agree with the spec tables the per-bit
+    walk consults, and every code must be reachable: probe all 2^k
+    prefixes and cross-check against a reference shortest-prefix scan
+    of the spec dicts."""
     from university_data_lakehouse_spark.operators import mpeg1_codec as mc
 
     def ref(dec, extras, prefix_bits, k):
@@ -238,36 +246,46 @@ def test_mpeg1_luts_equal_walk_tables():
                 return (got, length)
         return None
 
-    for lut, dec, extras, k in (
-        (mc._DC_LUMA_LUT, mc._DC_LUMA_DEC, [], 8),
-        (mc._DC_CHROMA_LUT, mc._DC_CHROMA_DEC, [], 8),
-        (mc._TCOEFF_LUT, mc._TCOEFF,
+    for tbl, dec, extras, k in (
+        (mc._DC_LUMA_DEC, {v: k for k, v in mc._DC_LUMA.items()}, [], 7),
+        (mc._DC_CHROMA_DEC, {v: k for k, v in mc._DC_CHROMA.items()},
+         [], 8),
+        (mc._TCOEFF_DEC, mc._TCOEFF,
          [(mc._EOB, "eob"), (mc._ESCAPE, "esc")], 10),
-        (mc._MB_LUT, mc._MB_INC_DEC,
+        (mc._MB_INC_DEC, {v: k for k, v in mc._MB_INC.items()},
          [(mc._MB_STUFFING, "stuff"), (mc._MB_ESCAPE, "esc")], 11),
     ):
+        assert tbl.width == k
+        assert dict(tbl) == {**dec, **dict(extras)}
         for p in range(1 << k):
-            assert lut[p] == ref(dec, extras, p, k), (k, p)
+            assert tbl.lut[p] == ref(dec, extras, p, k), (k, p)
 
 
 def test_mpeg1_lut_decode_equals_walk_decode():
-    """Force the walk by blanking the LUTs; frames must be identical
-    (covers DC sizes, tcoeff incl. EOB, MB increments, and the AC/
-    escape fixtures via the synth range)."""
+    """Force the walk by swapping every VLC table for a walk-only
+    copy; frames must be identical (covers DC sizes, tcoeff incl. EOB
+    and MB increments over the synth range, plus a hand fixture with
+    AC pairs in the table and through ESCAPE)."""
     from university_data_lakehouse_spark.operators import mpeg1_codec as mc
 
-    saved = (mc._DC_LUTS, mc._TCOEFF_LUT, mc._MB_LUT)
-    for i in (0, 5, 321, 4998):
-        p = mm.synth_mpeg1_payload(i)
+    names = ("_DC_LUMA_DEC", "_DC_CHROMA_DEC", "_TCOEFF_DEC",
+             "_MB_INC_DEC")
+    saved = {n: getattr(mc, n) for n in names}
+    ac_fixture = mc.encode_mpeg1_intra(
+        [{"Y": [[(50, [(0, 1), (2, -3), (20, 1), (0, 200)]), 60],
+                [70, (80, [(1, -4), (16, 1)])]],
+          "Cb": [[(128, [(0, -2)])]], "Cr": [[128]]}], 16, 16)
+    payloads = [mm.synth_mpeg1_payload(i) for i in (0, 5, 321, 4998)]
+    for p in payloads + [ac_fixture]:
         fast = mc.mpeg1_frames(p)
-        mc._DC_LUTS = {}
-        mc._TCOEFF_LUT = [None] * (1 << 10)
-        mc._MB_LUT = [None] * (1 << 11)
+        for n in names:
+            setattr(mc, n, _walk_only(saved[n]))
         try:
             slow = mc.mpeg1_frames(p)
         finally:
-            mc._DC_LUTS, mc._TCOEFF_LUT, mc._MB_LUT = saved
-        assert fast == slow, i
+            for n in names:
+                setattr(mc, n, saved[n])
+        assert fast == slow
 
 
 def test_jpeg_progressive_dc_only_reconstruction_is_scalar_exact():

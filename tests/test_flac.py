@@ -9,13 +9,15 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from university_data_lakehouse_spark.operators.bitio import (
+    BitReader,
+    BitWriter,
+)
 from university_data_lakehouse_spark.operators.flac_codec import (
     _coded_number_decode,
     _coded_number_encode,
     _crc8,
     _crc16,
-    _Reader,
-    _Writer,
     encode_flac,
     flac_samples,
 )
@@ -23,7 +25,7 @@ from university_data_lakehouse_spark.operators.flac_codec import (
 
 def _streaminfo(blocksize: int, rate: int, nch: int, bps: int,
                 total: int, md5: bytes = b"\x00" * 16) -> bytes:
-    w = _Writer()
+    w = BitWriter()
     w.put(blocksize, 16)
     w.put(blocksize, 16)
     w.put(0, 24)
@@ -36,10 +38,10 @@ def _streaminfo(blocksize: int, rate: int, nch: int, bps: int,
     return b"fLaC" + bytes([0x80]) + len(body).to_bytes(3, "big") + body
 
 
-def _frame_header(blocksize: int, frame_no: int = 0) -> _Writer:
+def _frame_header(blocksize: int, frame_no: int = 0) -> BitWriter:
     """Mono 16-bit 8 kHz frame header with the 8-bit blocksize-1 form
     (code 0110) — returns the writer positioned after the CRC-8."""
-    w = _Writer()
+    w = BitWriter()
     w.put(0b11111111111110, 14)
     w.put(0, 2)                              # reserved + fixed strategy
     w.put(0b0110, 4)                         # 8-bit blocksize-1 at end
@@ -54,7 +56,7 @@ def _frame_header(blocksize: int, frame_no: int = 0) -> _Writer:
     return w
 
 
-def _finish_frame(w: _Writer) -> bytes:
+def _finish_frame(w: BitWriter) -> bytes:
     w.align()
     w.put(_crc16(bytes(w.buf)), 16)
     return w.bytes()
@@ -65,7 +67,7 @@ def test_hand_packed_constant_subframe_decodes():
     involvement): subframe header 0|000000|0, one 16-bit sample."""
     w = _frame_header(4)
     w.put(0, 8)                              # CONSTANT, no wasted bits
-    w.put_signed(100, 16)
+    w.put(100, 16)
     payload = _streaminfo(4, 8000, 1, 16, 4) + _finish_frame(w)
     ch, sr = flac_samples(payload)
     assert ch == [[100, 100, 100, 100]]
@@ -80,15 +82,15 @@ def test_hand_packed_lpc_subframe_decodes():
     w.put(0, 1)
     w.put(0b100000, 6)                       # LPC, order (0 & 31) + 1 = 1
     w.put(0, 1)                              # no wasted bits
-    w.put_signed(5, 16)                      # warm-up
+    w.put(5, 16)                             # warm-up
     w.put(3, 4)                              # qlp precision - 1 = 3 → 4 bits
-    w.put_signed(1, 5)                       # shift 1
-    w.put_signed(2, 4)                       # coefficient 2
+    w.put(1, 5)                              # shift 1
+    w.put(2, 4)                              # coefficient 2
     w.put(0, 2)                              # rice method 0
     w.put(0, 4)                              # partition order 0
     w.put(2, 4)                              # rice parameter 2
     for _ in range(3):                       # residual +1 → zigzag 2 = q0,r2
-        w.put_unary(0)
+        w.put(1, 1)                          # unary 0
         w.put(2, 2)
     payload = _streaminfo(4, 8000, 1, 16, 4) + _finish_frame(w)
     ch, _ = flac_samples(payload)
@@ -102,8 +104,8 @@ def test_hand_packed_wasted_bits_shift():
     w.put(0, 1)
     w.put(0b000000, 6)                       # CONSTANT
     w.put(1, 1)                              # wasted-bits flag
-    w.put_unary(0)                           # k-1 = 0 → 1 wasted bit
-    w.put_signed(50, 15)
+    w.put(1, 1)                              # unary 0: k-1 = 0, 1 bit
+    w.put(50, 15)
     payload = _streaminfo(2, 8000, 1, 16, 2) + _finish_frame(w)
     ch, _ = flac_samples(payload)
     assert ch == [[100, 100]]
@@ -121,7 +123,7 @@ def test_hand_packed_rice_escape_raw_residuals():
     w.put(0b1111, 4)                         # escape
     w.put(6, 5)                              # raw bit width 6
     for v in (-20, 0, 25):
-        w.put_signed(v, 6)
+        w.put(v, 6)
     payload = _streaminfo(3, 8000, 1, 16, 3) + _finish_frame(w)
     ch, _ = flac_samples(payload)
     assert ch == [[-20, 0, 25]]
@@ -130,7 +132,7 @@ def test_hand_packed_rice_escape_raw_residuals():
 def test_header_crc8_verified():
     w = _frame_header(4)
     w.put(0, 8)
-    w.put_signed(7, 16)
+    w.put(7, 16)
     payload = bytearray(_streaminfo(4, 8000, 1, 16, 4)
                         + _finish_frame(w))
     # corrupt the blocking-strategy bit (inside the CRC-8'd header):
@@ -179,7 +181,7 @@ def test_stereo_modes_round_trip():
 def test_coded_number_round_trip():
     for n in [0, 1, 0x7F, 0x80, 0x7FF, 0x800, 0xFFFF, 0x10000,
               0x1FFFFF, 0x3FFFFFF, 0x7FFFFFFF, (1 << 36) - 1]:
-        r = _Reader(_coded_number_encode(n))
+        r = BitReader(_coded_number_encode(n))
         assert _coded_number_decode(r) == n
 
 
@@ -233,13 +235,13 @@ def test_crc_valid_out_of_range_samples_rejected():
     w.put(0, 1)
     w.put(0b001001, 6)                       # FIXED order 1
     w.put(0, 1)                              # no wasted bits
-    w.put_signed(32767, 16)                  # warm-up at the rail
+    w.put(32767, 16)                         # warm-up at the rail
     w.put(0, 2)                              # rice method 0
     w.put(0, 4)                              # partition order 0
     w.put(0b1111, 4)                         # escape to raw residuals
     w.put(9, 5)                              # raw bit width 9
     for _ in range(3):
-        w.put_signed(100, 9)                 # walks past 32767
+        w.put(100, 9)                        # walks past 32767
     payload = (_streaminfo(4, 8000, 1, 16, 4, md5=b"\x01" * 16)
                + _finish_frame(w))
     with pytest.raises(ValueError, match="bits-per-sample"):

@@ -11,11 +11,11 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from university_data_lakehouse_spark.operators.bitio import BitWriter
 from university_data_lakehouse_spark.operators.mpa_codec import (
     MODE_DUAL,
     MODE_MONO,
     MODE_STEREO,
-    _BitWriter,
     decode_mpa_l1,
     encode_mpa_l1,
     parse_mpa_header,
@@ -144,7 +144,7 @@ def test_malformed_streams_raise():
 def _raw_frame(alloc=0, scf=0, code=None, alloc_bits_override=None):
     """Hand-build one mono frame to plant forbidden field values the
     encoder refuses to write (the mpeg1 evil-writer discipline)."""
-    bw = _BitWriter()
+    bw = BitWriter()
     h = ((0xFFF << 20) | (1 << 19) | (0b11 << 17) | (1 << 16)
          | (2 << 12) | (2 << 10) | (MODE_MONO << 6))
     bw.put(h, 32)
@@ -156,7 +156,7 @@ def _raw_frame(alloc=0, scf=0, code=None, alloc_bits_override=None):
         bw.put(scf, 6)
         for _ in range(12):
             bw.put(code, alloc + 1)
-    bw.pad_to_byte()
+    bw.align()
     bw.buf.extend(b"\x00" * (96 - len(bw.buf)))
     return bytes(bw.buf)
 

@@ -8,10 +8,10 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from university_data_lakehouse_spark.operators.bitio import BitWriter
 from university_data_lakehouse_spark.operators.mpeg1_codec import (
     _IDCT_M,
     _ZIGZAG,
-    _BitWriter,
     encode_mpeg1_intra,
     mpeg1_frames,
 )
@@ -122,7 +122,7 @@ def test_custom_intra_quantizer_matrix():
         [{"Y": [[(50, [(2, 1)]), 60], [70, 80]],
           "Cb": [[128]], "Cr": [[128]]}], 16, 16, qscale=8)
     gop_at = base.find(b"\x00\x00\x01\xb8")
-    bw = _BitWriter()
+    bw = BitWriter()
     bw.put(16, 12)
     bw.put(16, 12)
     bw.put(1, 4)

@@ -1469,10 +1469,11 @@ def test_jpeg_422_layout_decodes():
     (MCU = two Y blocks + Cb + Cr covering 16x8), neutral chroma,
     luma blocks 100 and 140 — the decoded halves must carry their
     own values (a block-order or upsample-axis bug mixes them)."""
+    from university_data_lakehouse_spark.operators.bitio import BitWriter
     from university_data_lakehouse_spark.operators.multimodal import (
         _huffman_codes,
         _jpeg_category,
-        _BitWriter,
+        _jpeg_entropy_bytes,
         _JPEG_AC_BITS,
         _JPEG_AC_VALS,
         _JPEG_DC_BITS,
@@ -1484,7 +1485,7 @@ def test_jpeg_422_layout_decodes():
     dc_codes = _huffman_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
     ac_codes = _huffman_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
     eob_code, eob_len = ac_codes[0x00]
-    bw = _BitWriter()
+    bw = BitWriter()
     pred = 0
     for v in (100, 140):                     # two Y blocks, one MCU
         dc = v - 128
@@ -1508,7 +1509,7 @@ def test_jpeg_422_layout_decodes():
            + seg(0xDB, bytes([0x00]) + bytes([8] * 64))
            + seg(0xC0, sof) + seg(0xC4, dht)
            + seg(0xDA, bytes([3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 63, 0]))
-           + bw.flush() + b"\xff\xd9")
+           + _jpeg_entropy_bytes(bw) + b"\xff\xd9")
     out = decode_jpeg(jpg)
     assert (out["width"], out["height"]) == (16, 8)
     # 16x8x3 = 384 bytes, step 48 = one row; rows identical; each row

@@ -23,6 +23,8 @@ import hashlib
 
 import numpy as np
 
+from .bitio import BitReader, BitWriter, bits_at
+
 __all__ = ["encode_flac", "flac_samples"]
 
 
@@ -70,117 +72,6 @@ def _crc16(data: bytes) -> int:
     return crc
 
 
-# ------------------------------------------------------------ bit I/O
-
-class _Writer:
-    """MSB-first bit packer (FLAC is big-endian at the bit level)."""
-
-    def __init__(self) -> None:
-        self.buf = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def put(self, value: int, length: int) -> None:
-        if length:
-            self.acc = (self.acc << length) | (value & ((1 << length) - 1))
-            self.nbits += length
-            while self.nbits >= 8:
-                self.nbits -= 8
-                self.buf.append((self.acc >> self.nbits) & 0xFF)
-        self.acc &= (1 << self.nbits) - 1
-
-    def put_signed(self, value: int, length: int) -> None:
-        self.put(value & ((1 << length) - 1), length)
-
-    def put_unary(self, q: int) -> None:
-        """q zero bits terminated by a one bit."""
-        for _ in range(q):
-            self.put(0, 1)
-        self.put(1, 1)
-
-    def put_bits(self, bits: "np.ndarray") -> None:
-        """Append a 0/1 uint8 array in stream (MSB-first) order —
-        bit-identical to put()ing each element, but the byte-aligned
-        middle is bulk-packed with np.packbits instead of looping
-        per bit (the encoder's Rice residuals go through here)."""
-        n = len(bits)
-        head = min(n, (8 - self.nbits) % 8)
-        for i in range(head):                # align to a byte boundary
-            self.put(int(bits[i]), 1)
-        body = (n - head) & ~7
-        if body:
-            self.buf += np.packbits(bits[head:head + body]).tobytes()
-        for i in range(head + body, n):      # trailing partial byte
-            self.put(int(bits[i]), 1)
-
-    def align(self) -> None:
-        if self.nbits:
-            self.put(0, 8 - self.nbits)
-
-    def bytes(self) -> bytes:
-        assert self.nbits == 0
-        return bytes(self.buf)
-
-
-def _bit_field(data: bytes, bitpos: int, n: int) -> int:
-    """n bits of ``data`` starting at absolute bit offset ``bitpos``,
-    MSB-first — the random-access twin of _Reader.take for the
-    vectorized Rice path. Raises the same truncation ValueError."""
-    if n == 0:
-        return 0
-    end = bitpos + n
-    if end > len(data) * 8:
-        raise ValueError("flac: bitstream truncated")
-    first = bitpos >> 3
-    last = (end + 7) >> 3
-    return (int.from_bytes(data[first:last], "big")
-            >> ((last << 3) - end)) & ((1 << n) - 1)
-
-
-class _Reader:
-    """MSB-first bit reader; raises ValueError past the end (which the
-    Arrow null-row boundary converts to a null row).
-
-    ``ones`` (optional) is the sorted int64 ndarray of set-bit
-    offsets of ``data`` — precomputed once per payload by
-    flac_samples so the Rice residual reader can find unary
-    terminators by searchsorted instead of taking one bit at a time.
-    Kept as the ndarray np.flatnonzero returns (r17, ADVICE r16): a
-    Python int list costs ~28-32 B per set bit — ~100x the payload
-    in heap for a multi-MB real audio payload inside an Arrow
-    worker — vs 8 B/entry for the ndarray, same O(set-bits)
-    behavior."""
-
-    def __init__(self, data: bytes, pos: int = 0,
-                 ones=None) -> None:
-        self.data = data
-        self.pos = pos                       # byte position
-        self.bit = 0
-        self.ones = ones
-
-    def take(self, n: int) -> int:
-        bitpos = (self.pos << 3) + self.bit
-        out = _bit_field(self.data, bitpos, n)
-        bitpos += n
-        self.pos, self.bit = bitpos >> 3, bitpos & 7
-        return out
-
-    def take_signed(self, n: int) -> int:
-        v = self.take(n)
-        return v - (1 << n) if v >= (1 << (n - 1)) else v
-
-    def take_unary(self) -> int:
-        q = 0
-        while self.take(1) == 0:
-            q += 1
-        return q
-
-    def align(self) -> None:
-        if self.bit:
-            self.bit = 0
-            self.pos += 1
-
-
 # --------------------------------------------------- coded numbers
 
 def _coded_number_encode(n: int) -> bytes:
@@ -202,7 +93,7 @@ def _coded_number_encode(n: int) -> bytes:
     raise ValueError("flac: coded number out of range")
 
 
-def _coded_number_decode(r: _Reader) -> int:
+def _coded_number_decode(r: BitReader) -> int:
     first = r.take(8)
     if first < 0x80:
         return first
@@ -270,7 +161,7 @@ def _rice_cost(residuals: list[int], k: int) -> int:
     return sum((_zigzag(v) >> k) + 1 + k for v in residuals)
 
 
-def _write_residual(w: _Writer, residuals: list[int], blocksize: int,
+def _write_residual(w: BitWriter, residuals: list[int], blocksize: int,
                     order: int, part_order: int) -> None:
     """Rice method 0 (4-bit parameters), one parameter per partition
     chosen by exhaustive cost search — a real (if small) encoder
@@ -280,8 +171,8 @@ def _write_residual(w: _Writer, residuals: list[int], blocksize: int,
     table over the zigzagged partition (np.argmin takes the FIRST
     minimum, the same tie-break as min(range(15), key=...)), and the
     unary+remainder bits are scattered into one 0/1 array emitted via
-    put_bits — identical bitstream to the per-residual put_unary/put
-    loop (tests pin encode_flac bytes)."""
+    put_bits — identical bitstream to a per-residual unary+remainder
+    put loop (tests pin encode_flac bytes)."""
     w.put(0, 2)                              # coding method: rice 4-bit
     w.put(part_order, 4)
     nparts = 1 << part_order
@@ -312,7 +203,7 @@ def _write_residual(w: _Writer, residuals: list[int], blocksize: int,
         w.put_bits(bits)
 
 
-def _encode_subframe(w: _Writer, samples: list[int], bps: int,
+def _encode_subframe(w: BitWriter, samples: list[int], bps: int,
                      part_order: int) -> None:
     """FIXED order-2 subframe (order-0/VERBATIM fallback for frames
     too small to carry warm-up samples)."""
@@ -322,7 +213,7 @@ def _encode_subframe(w: _Writer, samples: list[int], bps: int,
         w.put(0b000001, 6)                   # VERBATIM
         w.put(0, 1)                          # no wasted bits
         for s in samples:
-            w.put_signed(s, bps)
+            w.put(s, bps)
         return
     order = 2
     while part_order and (n % (1 << part_order)
@@ -332,7 +223,7 @@ def _encode_subframe(w: _Writer, samples: list[int], bps: int,
     w.put(0b001000 | order, 6)               # FIXED, order 2
     w.put(0, 1)                              # no wasted bits
     for s in samples[:order]:
-        w.put_signed(s, bps)
+        w.put(s, bps)
     residuals = [samples[i] - 2 * samples[i - 1] + samples[i - 2]
                  for i in range(order, n)]
     _write_residual(w, residuals, n, order, part_order)
@@ -358,7 +249,7 @@ def encode_flac(channels: list[list[int]], sample_rate: int = 8000,
     pos = 0
     while pos < ns:
         cur = min(blocksize, ns - pos)
-        w = _Writer()
+        w = BitWriter()
         w.put(0b11111111111110, 14)          # sync
         w.put(0, 1)                          # reserved
         w.put(0, 1)                          # fixed-blocksize strategy
@@ -405,7 +296,7 @@ def encode_flac(channels: list[list[int]], sample_rate: int = 8000,
         frames += w.bytes()
         pos += cur
         frame_no += 1
-    info = _Writer()
+    info = BitWriter()
     # fixed-blocksize stream: min == max == the nominal block size
     # (the spec excludes a smaller final block from these fields)
     info.put(blocksize, 16)
@@ -425,7 +316,26 @@ def encode_flac(channels: list[list[int]], sample_rate: int = 8000,
 
 # ------------------------------------------------------------ decoder
 
-def _read_residual(r: _Reader, blocksize: int, order: int) -> list[int]:
+# Bounded Python-list window over the set-bit ndarray: list-speed
+# pointer walks in _read_residual with ~150 KiB peak extra heap
+# regardless of payload size — 4096 entries, each a list slot (8 B)
+# plus the Python int .tolist() builds for it (28 B; up to 36 B for
+# offsets of 2^30 bits and more).
+_ONES_WINDOW = 4096
+
+
+def _read_residual(r: BitReader, blocksize: int, order: int,
+                   ones: np.ndarray) -> list[int]:
+    """Partitioned Rice residuals over the payload's precomputed
+    set-bit index ``ones`` (sorted int64 bit offsets of the whole
+    payload): each unary terminator is found by walking ``ones``
+    (searchsorted for the first, pointer advance after — total work
+    is O(set bits consumed), not O(all bits)) and remainders are
+    random-access bits_at reads. The walk runs over a BOUNDED list
+    window of the int64 index (r17, ADVICE r16): list-speed element
+    access without materializing the whole index as Python ints —
+    peak extra heap is _ONES_WINDOW entries (~150 KiB) however large
+    the payload. Leaves ``r`` at the bit after the last residual."""
     method = r.take(2)
     if method > 1:
         raise ValueError("flac: reserved residual coding method")
@@ -435,51 +345,9 @@ def _read_residual(r: _Reader, blocksize: int, order: int) -> list[int]:
     nparts = 1 << part_order
     if blocksize % nparts or (blocksize >> part_order) < order:
         raise ValueError("flac: bad partition order")
-    residuals: list[int] = []
-    if r.ones is not None:
-        return _read_residual_fast(r, blocksize, order, pbits, escape,
-                                   part_order, nparts)
-    for p in range(nparts):
-        count = (blocksize >> part_order) - (order if p == 0 else 0)
-        if count < 0:
-            raise ValueError("flac: partition smaller than order")
-        param = r.take(pbits)
-        if param == escape:                  # raw n-bit residuals
-            raw = r.take(5)
-            residuals += ([0] * count if raw == 0 else
-                          [r.take_signed(raw) for _ in range(count)])
-        else:
-            for _ in range(count):
-                q = r.take_unary()
-                u = (q << param) | r.take(param)
-                residuals.append((u >> 1) ^ -(u & 1))
-    return residuals
-
-
-# Bounded Python-list window over the set-bit ndarray: list-speed
-# pointer walks in _read_residual_fast with ~32 KiB peak extra heap
-# regardless of payload size (4096 entries x ~8 B).
-_ONES_WINDOW = 4096
-
-
-def _read_residual_fast(r: _Reader, blocksize: int, order: int,
-                        pbits: int, escape: int, part_order: int,
-                        nparts: int) -> list[int]:
-    """Rice residual reader over the payload's precomputed set-bit
-    index: each unary terminator is found by walking ``r.ones``
-    (searchsorted for the first, pointer advance after — total work
-    is O(set bits consumed), not O(all bits)) and remainders are
-    random-access _bit_field reads. The walk runs over a BOUNDED
-    list window of the int64 index (r17, ADVICE r16): list-speed
-    element access without materializing the whole index as Python
-    ints — peak extra heap is _ONES_WINDOW entries (~32 KiB) however
-    large the payload. Decodes the identical values, raises the
-    identical truncation errors, and leaves the reader at the
-    identical bit position as the take()-at-a-time path (pytest pins
-    decode equality on the encoder's streams)."""
-    data, ones = r.data, r.ones
+    data = r.data
     nbits_total = len(data) * 8
-    bitpos = (r.pos << 3) + r.bit
+    bitpos = r.bitpos
     i = int(np.searchsorted(ones, bitpos, side="left"))
     win: list[int] = ones[i:i + _ONES_WINDOW].tolist()
     wi = 0
@@ -488,10 +356,10 @@ def _read_residual_fast(r: _Reader, blocksize: int, order: int,
         count = (blocksize >> part_order) - (order if p == 0 else 0)
         if count < 0:
             raise ValueError("flac: partition smaller than order")
-        param = _bit_field(data, bitpos, pbits)
+        param = bits_at(data, bitpos, pbits)
         bitpos += pbits
         if param == escape:                  # raw n-bit residuals
-            raw = _bit_field(data, bitpos, 5)
+            raw = bits_at(data, bitpos, 5)
             bitpos += 5
             if raw == 0:
                 residuals += [0] * count
@@ -499,7 +367,7 @@ def _read_residual_fast(r: _Reader, blocksize: int, order: int,
                 sign = 1 << (raw - 1)
                 full = 1 << raw
                 for _ in range(count):
-                    v = _bit_field(data, bitpos, raw)
+                    v = bits_at(data, bitpos, raw)
                     bitpos += raw
                     residuals.append(v - full if v >= sign else v)
             # skip the whole raw partition in one probe (it can span
@@ -522,13 +390,13 @@ def _read_residual_fast(r: _Reader, blocksize: int, order: int,
                     continue
                 break
             q = term - bitpos
-            u = (q << param) | _bit_field(data, term + 1, param)
+            u = (q << param) | bits_at(data, term + 1, param)
             residuals.append((u >> 1) ^ -(u & 1))
             bitpos = term + 1 + param
             wi += 1
     if bitpos > nbits_total:
         raise ValueError("flac: bitstream truncated")
-    r.pos, r.bit = bitpos >> 3, bitpos & 7
+    r.seek(bitpos)
     return residuals
 
 
@@ -567,7 +435,8 @@ def _fixed_reconstruct(warmup: list[int], res: list[int],
     return out
 
 
-def _read_subframe(r: _Reader, blocksize: int, bps: int) -> list[int]:
+def _read_subframe(r: BitReader, blocksize: int, bps: int,
+                   ones: np.ndarray) -> list[int]:
     if r.take(1):
         raise ValueError("flac: subframe padding bit set")
     stype = r.take(6)
@@ -583,7 +452,7 @@ def _read_subframe(r: _Reader, blocksize: int, bps: int) -> list[int]:
     elif 0b001000 <= stype <= 0b001100:      # FIXED order 0-4
         order = stype & 0x07
         out = [r.take_signed(bps) for _ in range(order)]
-        res = _read_residual(r, blocksize, order)
+        res = _read_residual(r, blocksize, order, ones)
         out = _fixed_reconstruct(out, res, order)
     elif stype >= 0b100000:                  # LPC order 1-32
         order = (stype & 0x1F) + 1
@@ -596,7 +465,7 @@ def _read_subframe(r: _Reader, blocksize: int, bps: int) -> list[int]:
         if shift < 0:
             raise ValueError("flac: negative LPC shift")
         coefs = [r.take_signed(prec) for _ in range(order)]
-        for res in _read_residual(r, blocksize, order):
+        for res in _read_residual(r, blocksize, order, ones):
             pred = sum(c * out[-1 - j] for j, c in enumerate(coefs)) \
                 >> shift
             out.append(pred + res)
@@ -634,7 +503,7 @@ def flac_samples(payload: bytes) -> tuple[list[list[int]], int] | None:
         raise ValueError("flac: unterminated metadata")
     if streaminfo is None:
         raise ValueError("flac: missing STREAMINFO")
-    r = _Reader(streaminfo)
+    r = BitReader(streaminfo)
     r.take(16)                               # min blocksize
     r.take(16)                               # max blocksize
     r.take(24)                               # min frame size
@@ -648,14 +517,14 @@ def flac_samples(payload: bytes) -> tuple[list[list[int]], int] | None:
     sample_rate = stream_rate
     # one set-bit index for the whole payload: every frame's Rice
     # reader finds unary terminators by searchsorted into this
-    # instead of pulling single bits (see _read_residual_fast). Kept
+    # instead of pulling single bits (see _read_residual). Kept
     # as the int64 ndarray — no .tolist(): the list form needed
     # ~100x the payload size in heap (ADVICE r16).
     ones = np.flatnonzero(
         np.unpackbits(np.frombuffer(payload, dtype=np.uint8)))
     while len(channels[0]) < total:
         frame_start = pos
-        r = _Reader(payload, pos, ones=ones)
+        r = BitReader(payload, pos)
         if r.take(14) != 0b11111111111110:
             raise ValueError("flac: lost frame sync")
         if r.take(1):
@@ -690,9 +559,9 @@ def flac_samples(payload: bytes) -> tuple[list[list[int]], int] | None:
             raise ValueError("flac: invalid sample rate code")
         elif sr_code:
             sample_rate = _SAMPLE_RATES[sr_code]
-        assert r.bit == 0                    # header is byte-aligned here
+        assert r.bitpos % 8 == 0             # header is byte-aligned here
         crc8 = r.take(8)
-        if crc8 != _crc8(payload[frame_start:r.pos - 1]):
+        if crc8 != _crc8(payload[frame_start:r.bitpos // 8 - 1]):
             raise ValueError("flac: frame header CRC-8 mismatch")
         if bps_code == 0:
             bps = stream_bps
@@ -704,15 +573,15 @@ def flac_samples(payload: bytes) -> tuple[list[list[int]], int] | None:
         if ch_code < 0b1000:                 # independent channels
             if ch_code + 1 != nch:
                 raise ValueError("flac: channel count mismatch")
-            subs = [_read_subframe(r, blocksize, bps)
+            subs = [_read_subframe(r, blocksize, bps, ones)
                     for _ in range(nch)]
         elif ch_code <= 0b1010:              # stereo decorrelation
             if nch != 2:
                 raise ValueError("flac: stereo assignment, nch != 2")
             left_bps = bps + (1 if ch_code == 0b1001 else 0)
             right_bps = bps + (1 if ch_code != 0b1001 else 0)
-            a = _read_subframe(r, blocksize, left_bps)
-            b = _read_subframe(r, blocksize, right_bps)
+            a = _read_subframe(r, blocksize, left_bps, ones)
+            b = _read_subframe(r, blocksize, right_bps, ones)
             if ch_code == 0b1000:            # left/side
                 subs = [a, [a[j] - b[j] for j in range(blocksize)]]
             elif ch_code == 0b1001:          # right/side (side stored first)
@@ -727,11 +596,11 @@ def flac_samples(payload: bytes) -> tuple[list[list[int]], int] | None:
             raise ValueError("flac: reserved channel assignment")
         r.align()
         crc16 = r.take(16)
-        if crc16 != _crc16(payload[frame_start:r.pos - 2]):
+        if crc16 != _crc16(payload[frame_start:r.bitpos // 8 - 2]):
             raise ValueError("flac: frame CRC-16 mismatch")
         for c, s in zip(channels, subs):
             c.extend(s)
-        pos = r.pos
+        pos = r.bitpos // 8
     for c in channels:
         del c[total:]                        # guard against overrun
     # A CRC-valid stream can still carry FIXED/LPC residuals whose

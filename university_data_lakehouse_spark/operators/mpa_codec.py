@@ -76,6 +76,10 @@ Spec-arithmetic notes (all public, §2.4.2.3 / §2.4.3.3):
 - Frame length: slots = ⌊144·bitrate/fs⌋ is the LAYER II/III formula;
   Layer I uses slots = ⌊12·bitrate/fs⌋ (+1 if padding) of FOUR bytes.
 
+Bit-level reads and writes go through bitio.py: one BitReader per
+frame (sliced to the frame, so audio data overrunning the slot count
+raises) and a BitWriter for the encoder.
+
 Reference parity note: the reference repo (thomasganka/
 university-data-lakehouse) has no media decode at all; this tier
 completes the compressed-audio family (G.711 / IMA-ADPCM / FLAC /
@@ -86,6 +90,8 @@ now MPEG-1 Layer I) for the multimodal training-data surface
 from __future__ import annotations
 
 import numpy as np
+
+from .bitio import BitReader, BitWriter
 
 MPA_BITRATES_L1 = (0, 32, 64, 96, 128, 160, 192, 224,
                    256, 288, 320, 352, 384, 416, 448)  # kbit/s, idx 0 = free
@@ -130,27 +136,6 @@ def requantize_l1(code: int, nb: int) -> float:
     """Layer I requantization: s''' = (2(C+1) − 2^nb)/(2^nb − 1).
     One correctly-rounded IEEE division of two exact integers."""
     return float(2 * (code + 1) - (1 << nb)) / float((1 << nb) - 1)
-
-
-class _BitReader:
-    __slots__ = ("data", "pos", "end")
-
-    def __init__(self, data: bytes, start_bit: int, end_bit: int):
-        self.data = data
-        self.pos = start_bit
-        self.end = end_bit
-
-    def take(self, n: int) -> int:
-        if self.pos + n > self.end:
-            raise ValueError("mpa: bitstream truncated")
-        v = 0
-        pos = self.pos
-        data = self.data
-        for _ in range(n):
-            v = (v << 1) | ((data[pos >> 3] >> (7 - (pos & 7))) & 1)
-            pos += 1
-        self.pos = pos
-        return v
 
 
 def parse_mpa_header(b: bytes, off: int = 0) -> dict | None:
@@ -222,7 +207,7 @@ def decode_mpa_l1(payload: bytes) -> dict | None:
         if off + hdr["frame_bytes"] > len(payload):
             raise ValueError("mpa: frame extends past payload")
         start = off + 4 + (2 if hdr["crc"] else 0)
-        br = _BitReader(payload, start * 8, (off + hdr["frame_bytes"]) * 8)
+        br = BitReader(payload[start:off + hdr["frame_bytes"]])
         alloc = np.zeros((nch, 32), dtype=np.int64)
         for sb in range(32):
             for ch in range(nch):
@@ -296,26 +281,6 @@ def synthesize_pcm(subbands: np.ndarray) -> np.ndarray:
         "decode surface")
 
 
-class _BitWriter:
-    def __init__(self) -> None:
-        self.buf = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def put(self, value: int, length: int) -> None:
-        for i in range(length - 1, -1, -1):
-            self.acc = (self.acc << 1) | ((value >> i) & 1)
-            self.nbits += 1
-            if self.nbits == 8:
-                self.buf.append(self.acc)
-                self.acc = 0
-                self.nbits = 0
-
-    def pad_to_byte(self) -> None:
-        if self.nbits:
-            self.put(0, 8 - self.nbits)
-
-
 def encode_mpa_l1(frames: list, fs_idx: int = 2, bitrate_idx: int = 2,
                   mode: int = MODE_MONO) -> bytes:
     """Synthesis-side Layer I encoder for tests and synthetic corpora
@@ -337,7 +302,7 @@ def encode_mpa_l1(frames: list, fs_idx: int = 2, bitrate_idx: int = 2,
     for spec in frames:
         if len(spec) != nch:
             raise ValueError("mpa encode: channel count mismatch")
-        bw = _BitWriter()
+        bw = BitWriter()
         h = (0xFFF << 20) | (1 << 19) | (0b11 << 17) | (1 << 16)
         h |= (bitrate_idx << 12) | (fs_idx << 10) | (mode << 6)
         bw.put(h, 32)
@@ -365,7 +330,7 @@ def encode_mpa_l1(frames: list, fs_idx: int = 2, bitrate_idx: int = 2,
                     if not 0 <= code <= (1 << nb) - 2:
                         raise ValueError("mpa encode: code out of range")
                     bw.put(code, nb)
-        bw.pad_to_byte()
+        bw.align()
         if len(bw.buf) > frame_bytes:
             raise ValueError("mpa encode: frame data exceeds slot count")
         bw.buf.extend(b"\x00" * (frame_bytes - len(bw.buf)))

@@ -29,6 +29,10 @@ Scope (the honest boundary, mirroring the repo's JPEG/FLAC tiers):
   through optional per-block (run, level) lists (VLC where the pair is
   in the table, escape otherwise).
 
+Bit-level reads and writes go through bitio.py: BitReader per start-
+code segment, BitWriter for the encoder, and one VlcTable (peek LUT +
+bit-walk fallback) per VLC table above.
+
 Reference parity note: the reference repo (thomasganka/
 university-data-lakehouse) has no media decode at all; this tier
 exists for the multimodal training-data pipeline surface (SURVEY §2.8)
@@ -38,6 +42,8 @@ and follows ISO/IEC 11172-2 alone.
 from __future__ import annotations
 
 import numpy as np
+
+from .bitio import BitReader, BitWriter, VlcTable
 
 SEQ_START = 0xB3
 GOP_START = 0xB8
@@ -84,8 +90,10 @@ _DC_CHROMA = {
     4: (0b1110, 4), 5: (0b11110, 5), 6: (0b111110, 6),
     7: (0b1111110, 7), 8: (0b11111110, 8),
 }
-_DC_LUMA_DEC = {v: k for k, v in _DC_LUMA.items()}
-_DC_CHROMA_DEC = {v: k for k, v in _DC_CHROMA.items()}
+_DC_LUMA_DEC = VlcTable({v: k for k, v in _DC_LUMA.items()},
+                        "mpeg1 dct_dc_size")
+_DC_CHROMA_DEC = VlcTable({v: k for k, v in _DC_CHROMA.items()},
+                          "mpeg1 dct_dc_size")
 
 # dct_coeff_next run/level VLCs (Table B.5c) through the 10-bit group;
 # each is followed by one sign bit. Longer codes (12–17 bit groups)
@@ -111,6 +119,8 @@ _TCOEFF = {
 _TCOEFF_ENC = {rl: cl for cl, rl in _TCOEFF.items()}
 _EOB = (0b10, 2)
 _ESCAPE = (0b000001, 6)
+_TCOEFF_DEC = VlcTable({**_TCOEFF, _EOB: "eob", _ESCAPE: "esc"},
+                       "mpeg1 dct_coeff")
 
 # macroblock_address_increment VLCs (Table B.1, increments 1–15;
 # escape adds 33, stuffing is discarded).
@@ -121,38 +131,11 @@ _MB_INC = {
     11: (0b00001010, 8), 12: (0b00001001, 8), 13: (0b00001000, 8),
     14: (0b00000111, 8), 15: (0b00000110, 8),
 }
-_MB_INC_DEC = {v: k for k, v in _MB_INC.items()}
 _MB_ESCAPE = (0b00000001000, 11)
 _MB_STUFFING = (0b00000001111, 11)
-
-
-def _peek_lut(entries, k: int) -> list:
-    """Prefix LUT over a VLC table: lut[next k bits] = (symbol,
-    length), None where no code of <= k bits owns the prefix. All
-    tables here are STATIC module constants, so the build cost is
-    paid once at import; decode becomes one table probe instead of a
-    per-bit walk (r17, guide §4.2). Prefix-code uniqueness makes the
-    probe bit-identical to the walk it replaces."""
-    lut: list = [None] * (1 << k)
-    for (code, length), sym in entries:
-        base = code << (k - length)
-        fill = (sym, length)
-        for i in range(1 << (k - length)):
-            lut[base + i] = fill
-    return lut
-
-
-# dct_dc_size codes are <= 8 bits; dct_coeff (incl. EOB/ESCAPE)
-# <= 10; mb_address_increment (incl. stuffing/escape) <= 11.
-_DC_LUMA_LUT = _peek_lut(_DC_LUMA_DEC.items(), 8)
-_DC_CHROMA_LUT = _peek_lut(_DC_CHROMA_DEC.items(), 8)
-_DC_LUTS = {id(_DC_LUMA_DEC): _DC_LUMA_LUT,
-            id(_DC_CHROMA_DEC): _DC_CHROMA_LUT}
-_TCOEFF_LUT = _peek_lut(
-    [*_TCOEFF.items(), (_EOB, "eob"), (_ESCAPE, "esc")], 10)
-_MB_LUT = _peek_lut(
-    [*_MB_INC_DEC.items(), (_MB_STUFFING, "stuff"),
-     (_MB_ESCAPE, "esc")], 11)
+_MB_INC_DEC = VlcTable({**{v: k for k, v in _MB_INC.items()},
+                        _MB_STUFFING: "stuff", _MB_ESCAPE: "esc"},
+                       "mpeg1 macroblock_address_increment")
 
 
 def _idct_matrix() -> np.ndarray:
@@ -171,99 +154,6 @@ def _idct_matrix() -> np.ndarray:
 _IDCT_M = _idct_matrix()
 
 
-class _BitWriter:
-    """MSB-first bit packer (no byte stuffing — MPEG start codes are
-    unique by VLC design, unlike JPEG's 0xFF escaping)."""
-
-    def __init__(self) -> None:
-        self.buf = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def put(self, value: int, length: int) -> None:
-        self.acc = (self.acc << length) | (value & ((1 << length) - 1))
-        self.nbits += length
-        while self.nbits >= 8:
-            self.buf.append((self.acc >> (self.nbits - 8)) & 0xFF)
-            self.nbits -= 8
-
-    def align(self) -> None:
-        if self.nbits:
-            self.put(0, 8 - self.nbits)
-
-    def bytes(self) -> bytes:
-        self.align()
-        return bytes(self.buf)
-
-
-class _BitReader:
-    """MSB-first bit reader over one start-code-delimited segment."""
-
-    def __init__(self, data: bytes) -> None:
-        self.data = data
-        self.pos = 0
-        self.acc = 0
-        self.nbits = 0
-        # end of meaningful data: everything at/after this offset is
-        # zero stuffing (computed ONCE so rest_is_zero is O(1) per
-        # call — a bytes-slice scan per macroblock would be quadratic
-        # in slice size on the decode hot path)
-        self._nz_end = len(data.rstrip(b"\x00"))
-
-    def take(self, n: int) -> int:
-        while self.nbits < n:
-            if self.pos >= len(self.data):
-                raise ValueError("mpeg1: bitstream truncated")
-            self.acc = (self.acc << 8) | self.data[self.pos]
-            self.pos += 1
-            self.nbits += 8
-        out = (self.acc >> (self.nbits - n)) & ((1 << n) - 1)
-        self.nbits -= n
-        return out
-
-    def rest_is_zero(self) -> bool:
-        """True when every remaining bit is 0 — the byte-aligned zero
-        stuffing next_start_code() allows after a slice (any number
-        of full zero bytes plus the sub-byte pad). O(1): the last
-        nonzero byte offset is precomputed in __init__."""
-        if self.nbits and (self.acc & ((1 << self.nbits) - 1)):
-            return False
-        return self.pos >= self._nz_end
-
-    def peek(self, n: int) -> int:
-        """Next ``n`` bits without consuming, or -1 when fewer remain
-        (the LUT callers then fall back to the per-bit walk, which
-        reproduces the legacy end-of-stream errors exactly)."""
-        data = self.data
-        ln = len(data)
-        while self.nbits < n:
-            if self.pos >= ln:
-                return -1
-            self.acc = (self.acc << 8) | data[self.pos]
-            self.pos += 1
-            self.nbits += 8
-        return (self.acc >> (self.nbits - n)) & ((1 << n) - 1)
-
-
-def _dc_size_decode(br: _BitReader, table: dict) -> int:
-    lut = _DC_LUTS.get(id(table))
-    if lut is not None:
-        p = br.peek(8)
-        if p >= 0:
-            hit = lut[p]
-            if hit is not None:
-                br.nbits -= hit[1]
-                return hit[0]
-    code, length = 0, 0
-    while length < 9:
-        code = (code << 1) | br.take(1)
-        length += 1
-        sym = table.get((code, length))
-        if sym is not None:
-            return sym
-    raise ValueError("mpeg1: invalid dct_dc_size code")
-
-
 def _extend(value: int, size: int) -> int:
     """Differential magnitude extension (same one's-complement-style
     rule as JPEG EXTEND): top bit 0 encodes a negative value."""
@@ -275,7 +165,7 @@ def _extend(value: int, size: int) -> int:
 # ------------------------------------------------------------ encoder
 
 
-def _put_dc(bw: _BitWriter, table: dict, diff: int) -> None:
+def _put_dc(bw: BitWriter, table: dict, diff: int) -> None:
     size = abs(diff).bit_length()
     if size > 8:
         raise ValueError("mpeg1: DC differential out of range")
@@ -286,7 +176,7 @@ def _put_dc(bw: _BitWriter, table: dict, diff: int) -> None:
         bw.put(mag, size)
 
 
-def _put_coeff(bw: _BitWriter, run: int, level: int) -> None:
+def _put_coeff(bw: BitWriter, run: int, level: int) -> None:
     """One (run, level) AC pair: Table B.5c VLC + sign where the pair
     has a code in the supported groups, the spec ESCAPE otherwise."""
     key = (run, abs(level))
@@ -323,7 +213,7 @@ def encode_mpeg1_intra(frames: list, w: int, h: int,
     if w % 16 or h % 16:
         raise ValueError("mpeg1: dimensions must be multiples of 16")
     out = bytearray()
-    bw = _BitWriter()
+    bw = BitWriter()
     bw.put(w, 12)
     bw.put(h, 12)
     bw.put(1, 4)                  # pel aspect: square
@@ -336,7 +226,7 @@ def encode_mpeg1_intra(frames: list, w: int, h: int,
     bw.put(0, 1)                  # load_non_intra_quantizer_matrix
     out += b"\x00\x00\x01" + bytes([SEQ_START]) + bw.bytes()
 
-    bw = _BitWriter()
+    bw = BitWriter()
     bw.put(0, 1)                  # time_code: drop_frame_flag
     bw.put(0, 5)                  # hours
     bw.put(0, 6)                  # minutes
@@ -348,14 +238,14 @@ def encode_mpeg1_intra(frames: list, w: int, h: int,
     out += b"\x00\x00\x01" + bytes([GOP_START]) + bw.bytes()
 
     for f, planes in enumerate(frames):
-        bw = _BitWriter()
+        bw = BitWriter()
         bw.put(f % 1024, 10)      # temporal_reference
         bw.put(1, 3)              # picture_coding_type: I
         bw.put(0xFFFF, 16)        # vbv_delay
         bw.put(0, 1)              # extra_bit_picture
         out += b"\x00\x00\x01" + bytes([PIC_START]) + bw.bytes()
 
-        bw = _BitWriter()
+        bw = BitWriter()
         bw.put(qscale, 5)
         bw.put(0, 1)              # extra_bit_slice
         preds = {"Y": 128, "Cb": 128, "Cr": 128}   # quantized domain
@@ -407,7 +297,7 @@ def _segments(payload: bytes) -> list[tuple[int, bytes]]:
 
 
 def _parse_seq_header(body: bytes) -> tuple[int, int, list[int]]:
-    br = _BitReader(body)
+    br = BitReader(body)
     w = br.take(12)
     h = br.take(12)
     br.take(4)                    # pel aspect
@@ -431,12 +321,12 @@ def _parse_seq_header(body: bytes) -> tuple[int, int, list[int]]:
     return w, h, qmat
 
 
-def _decode_block(br: _BitReader, dc_table: dict, pred: int,
+def _decode_block(br: BitReader, dc_table: VlcTable, pred: int,
                   qscale: int, qmat: list[int]) -> tuple[np.ndarray, int]:
     """One intra block → (8×8 pel array, new quantized-DC predictor).
     DC: fixed step 8 (§2.4.4.1). AC: (2·level·qscale·Q)/16 truncated
     toward zero, oddification mismatch control, ±2048 saturation."""
-    size = _dc_size_decode(br, dc_table)
+    size = dc_table.decode(br)
     diff = _extend(br.take(size), size) if size else 0
     qdc = pred + diff
     dc_val = max(-2048, min(2047, qdc * 8))
@@ -447,33 +337,7 @@ def _decode_block(br: _BitReader, dc_table: dict, pred: int,
     k = 0
     ac_seen = False
     while True:
-        # peek-10 prefix probe replaces the per-bit walk (bit-
-        # identical; the walk below stays as the fallback for the
-        # stream tail and reproduces the legacy error behavior)
-        sym = None
-        p = br.peek(10)
-        if p >= 0:
-            hit = _TCOEFF_LUT[p]
-            if hit is not None:
-                br.nbits -= hit[1]
-                sym = hit[0]
-        if sym is None:
-            code, length = 0, 0
-            while length < 11:
-                code = (code << 1) | br.take(1)
-                length += 1
-                if (code, length) == _EOB:
-                    sym = "eob"
-                    break
-                if (code, length) == _ESCAPE:
-                    sym = "esc"
-                    break
-                rl = _TCOEFF.get((code, length))
-                if rl is not None:
-                    sym = rl
-                    break
-        if sym is None:
-            raise ValueError("mpeg1: invalid dct_coeff code")
+        sym = _TCOEFF_DEC.decode(br)
         if sym == "eob":
             break
         if sym == "esc":
@@ -586,7 +450,7 @@ def mpeg1_frames(payload: bytes) -> tuple[int, int, list[bytes]] | None:
             continue
         elif code == PIC_START:
             finish()
-            br = _BitReader(body)
+            br = BitReader(body)
             br.take(10)           # temporal_reference
             ptype = br.take(3)
             if ptype != 1:        # P/B need a real codec: probe tier
@@ -626,7 +490,7 @@ def _decode_slice(code: int, body: bytes, planes: tuple, w: int,
     re-decoding an address raises, so the caller's exact-count gate
     (pic_mbs == pic_total) truly means every address was covered
     once (duplicate slices can't cancel missing ones, r10 review)."""
-    br = _BitReader(body)
+    br = BitReader(body)
     qscale = br.take(5)
     if qscale == 0:
         raise ValueError("mpeg1: quantizer_scale zero")
@@ -640,35 +504,14 @@ def _decode_slice(code: int, body: bytes, planes: tuple, w: int,
     # next_start_code() permits ANY number of zero stuffing bytes
     # after the last macroblock, not just the sub-byte pad — stop on
     # all-zero remainder, never misread it as an address increment
-    # (r10 self-review).
-    while not br.rest_is_zero():
+    # (r10 self-review). The remainder is nonzero while the last
+    # nonzero byte is wholly unread, or its unread low bits are set.
+    nz_end = len(body.rstrip(b"\x00")) << 3
+    while (rem := nz_end - br.bitpos) >= 8 or (rem > 0 and br.peek(rem)):
         # macroblock_address_increment (stuffing discarded, escape +33)
         inc = 0
         while True:
-            sym = None
-            p = br.peek(11)              # LUT probe, walk fallback
-            if p >= 0:
-                hit = _MB_LUT[p]
-                if hit is not None:
-                    br.nbits -= hit[1]
-                    sym = hit[0]
-            if sym is None:
-                code2, length = 0, 0
-                while length < 11:
-                    code2 = (code2 << 1) | br.take(1)
-                    length += 1
-                    if (code2, length) == _MB_STUFFING:
-                        sym = "stuff"
-                        break
-                    if (code2, length) == _MB_ESCAPE:
-                        sym = "esc"
-                        break
-                    got = _MB_INC_DEC.get((code2, length))
-                    if got is not None:
-                        sym = got
-                        break
-            if sym is None:
-                raise ValueError("mpeg1: invalid mb address increment")
+            sym = _MB_INC_DEC.decode(br)
             if sym == "stuff":
                 continue
             if sym == "esc":

@@ -42,6 +42,12 @@ Three decode tiers:
   a richer container. ``decode_stub`` remains the deterministic fake
   for plumbing tests.
 
+Bit-level I/O for the JPEG family goes through bitio.py (BitWriter,
+BitReader, VlcTable Huffman tables); this module keeps only the JPEG
+byte layer: _JpegBitReader (0xFF00 unstuffing, stop at markers, RSTn)
+and _jpeg_entropy_bytes (1-bit pad + 0xFF stuffing). GIF's LSB-first
+LZW packing is a different bit order and stays here.
+
 Scale notes: mapInPandas streams Arrow record batches — payload bytes
 never materialize row-at-a-time in Python; batch size is governed by
 spark.sql.execution.arrow.maxRecordsPerBatch. Feature extraction is a
@@ -72,6 +78,7 @@ from pyspark.sql.types import (
 )
 
 from ..sources.loader import load_table, scatter
+from .bitio import BitReader, BitWriter, VlcTable
 from .flac_codec import encode_flac, flac_samples
 from .mpa_codec import scalefactor_sql_literals
 from .mpeg1_codec import encode_mpeg1_intra, mpeg1_frames
@@ -795,101 +802,52 @@ def _huffman_codes(bits: tuple, vals: tuple) -> dict:
     return out
 
 
-# Peek-width of the Huffman prefix LUT (r17, guide §4.2): one
-# 2^11-entry table lookup replaces the per-bit walk for every code of
-# <= 11 bits (all codes of the synth corpora; T.81 allows up to 16 —
-# longer codes fall back to the walk, bit-identical by prefix-code
-# uniqueness). 11 balances hit rate against build cost for the
-# per-table fill of 2^(11-len) slots per symbol.
-_HUFF_PEEK = 11
-
-
-class _HuffTable(dict):
-    """Decode table {(code, length): symbol} plus its prefix LUT:
-    ``lut[next 11 bits] = (length << 8) | symbol`` (0 = no code of
-    <= 11 bits on that prefix → per-bit fallback). A dict subclass so
-    every existing consumer (``.get``, None checks, equality in
-    tests) sees the plain mapping unchanged."""
-
-    __slots__ = ("lut",)
-
-    def __init__(self, dec: dict) -> None:
-        super().__init__(dec)
-        lut = [0] * (1 << _HUFF_PEEK)
-        for (code, length), sym in dec.items():
-            if length <= _HUFF_PEEK:
-                base = code << (_HUFF_PEEK - length)
-                fill = (length << 8) | sym
-                for i in range(1 << (_HUFF_PEEK - length)):
-                    lut[base + i] = fill
-        self.lut = lut
-
-
-# (bits, vals) -> _HuffTable memo: every frame of an MJPEG stream and
+# (bits, vals) -> VlcTable memo: every frame of an MJPEG stream and
 # every payload of a synth corpus re-declares the SAME tables, and the
 # per-DHT rebuild (canonical assignment + LUT fill) was the single
 # largest cost of the MJPEG decode (~35% — r17 profile). Keyed by the
 # exact spec bytes, so a hit is definitionally the same table. Bounded
 # so a crafted stream declaring thousands of distinct tables cannot
 # grow worker memory without limit.
-_DHT_MEMO: dict[tuple, _HuffTable] = {}
+_DHT_MEMO: dict[tuple, VlcTable] = {}
 _DHT_MEMO_MAX = 512
 
 
-class _BitWriter:
-    """MSB-first bit packer with JPEG 0xFF byte stuffing."""
+def _jpeg_entropy_bytes(bw: BitWriter) -> bytes:
+    """Close an entropy-coded segment: pad with 1-bits (T.81 F.1.2.3)
+    and stuff a 0x00 after every 0xFF data byte — the same bytes as
+    stuffing each byte when it is emitted."""
+    bw.align(1)
+    return bw.bytes().replace(b"\xff", b"\xff\x00")
 
-    def __init__(self) -> None:
-        self.buf = bytearray()
-        self.acc = 0
-        self.nbits = 0
 
-    def put(self, value: int, length: int) -> None:
-        self.acc = (self.acc << length) | (value & ((1 << length) - 1))
-        self.nbits += length
-        while self.nbits >= 8:
-            byte = (self.acc >> (self.nbits - 8)) & 0xFF
-            self.buf.append(byte)
+class _JpegBitReader(BitReader):
+    """BitReader over an entropy-coded segment: the refill drops the
+    0x00 of each stuffed 0xFF00 and stops at a marker or the end, so
+    take() raises there and peek() returns -1 (VlcTable then walks
+    bit by bit up to the marker). ``pos`` is the next byte to load,
+    which is the marker once a scan's data is consumed."""
+
+    __slots__ = ()
+
+    SHORT = "jpeg: entropy data ends or hits a marker"
+
+    def _refill(self, n: int) -> bool:
+        data, pos, nbits = self.data, self.pos, self.nbits
+        acc = self.acc & ((1 << nbits) - 1)
+        end = len(data)
+        while nbits < n and pos < end:
+            byte = data[pos]
             if byte == 0xFF:
-                self.buf.append(0x00)
-            self.nbits -= 8
-
-    def flush(self) -> bytes:
-        if self.nbits:
-            pad = 8 - self.nbits
-            self.put((1 << pad) - 1, pad)    # pad with 1s per spec
-        return bytes(self.buf)
-
-
-class _BitReader:
-    """MSB-first bit reader over an entropy-coded segment with 0xFF00
-    unstuffing; raises ValueError past the end or at a real marker."""
-
-    def __init__(self, data: bytes, pos: int) -> None:
-        self.data = data
-        self.pos = pos
-        self.acc = 0
-        self.nbits = 0
-
-    def take(self, n: int) -> int:
-        while self.nbits < n:
-            if self.pos >= len(self.data):
-                raise ValueError("jpeg: entropy stream truncated")
-            byte = self.data[self.pos]
-            self.pos += 1
-            if byte == 0xFF:
-                if self.pos >= len(self.data):
-                    raise ValueError("jpeg: dangling 0xFF")
-                nxt = self.data[self.pos]
-                if nxt == 0x00:
-                    self.pos += 1            # stuffed 0xFF data byte
-                else:
-                    raise ValueError("jpeg: marker inside entropy data")
-            self.acc = (self.acc << 8) | byte
-            self.nbits += 8
-        out = (self.acc >> (self.nbits - n)) & ((1 << n) - 1)
-        self.nbits -= n
-        return out
+                if pos + 1 >= end or data[pos + 1] != 0x00:
+                    break                    # marker / dangling 0xFF
+                pos += 2                     # stuffed data byte
+            else:
+                pos += 1
+            acc = (acc << 8) | byte
+            nbits += 8
+        self.pos, self.acc, self.nbits = pos, acc, nbits
+        return nbits >= n
 
     def restart(self) -> None:
         """Consume an RSTn marker at a restart boundary: drop the
@@ -901,46 +859,6 @@ class _BitReader:
                 or not 0xD0 <= self.data[self.pos + 1] <= 0xD7):
             raise ValueError("jpeg: missing restart marker")
         self.pos += 2
-
-    def huff(self, table: dict) -> int:
-        """table: {(code, length): symbol}, normally a _HuffTable —
-        then one peek-11 LUT probe decodes the symbol (r17, guide
-        §4.2). The peek refill mirrors take()'s unstuffing but STOPS
-        at a marker / stream end instead of raising, so the per-bit
-        fallback below reproduces the exact legacy behavior (and its
-        exact errors) for long codes, invalid prefixes and the
-        stream tail. Prefix-code uniqueness makes the LUT decode
-        bit-identical to the walk."""
-        lut = getattr(table, "lut", None)
-        if lut is not None:
-            data, n = self.data, len(self.data)
-            while self.nbits < _HUFF_PEEK:
-                pos = self.pos
-                if pos >= n:
-                    break
-                byte = data[pos]
-                if byte == 0xFF:
-                    if pos + 1 >= n or data[pos + 1] != 0x00:
-                        break                # marker / dangling 0xFF
-                    self.pos = pos + 2       # stuffed data byte
-                else:
-                    self.pos = pos + 1
-                self.acc = (self.acc << 8) | byte
-                self.nbits += 8
-            if self.nbits >= _HUFF_PEEK:
-                v = lut[(self.acc >> (self.nbits - _HUFF_PEEK))
-                        & ((1 << _HUFF_PEEK) - 1)]
-                if v:
-                    self.nbits -= v >> 8
-                    return v & 0xFF
-        code, length = 0, 0
-        while length <= 16:
-            code = (code << 1) | self.take(1)
-            length += 1
-            sym = table.get((code, length))
-            if sym is not None:
-                return sym
-        raise ValueError("jpeg: invalid huffman code")
 
 
 def _jpeg_extend(value: int, size: int) -> int:
@@ -1121,7 +1039,7 @@ def _gray_jpeg_bytes(w: int, h: int, block_val) -> bytes:
     #                                          exactness requirement
     dc_codes = _huffman_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
     ac_codes = _huffman_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
-    bw = _BitWriter()
+    bw = BitWriter()
     pred = 0
     for b in range((w // 8) * (h // 8)):
         dc = block_val(b) - 128
@@ -1144,7 +1062,7 @@ def _gray_jpeg_bytes(w: int, h: int, block_val) -> bytes:
                         + bytes([1, 0x11, 0]))
         + _jpeg_segment(0xC4, dht)
         + _jpeg_segment(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
-        + bw.flush()
+        + _jpeg_entropy_bytes(bw)
         + b"\xff\xd9"
     )
 
@@ -1558,7 +1476,7 @@ def synth_jpeg_color_payload(doc_id: int) -> bytes:
     dc_codes = _huffman_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
     ac_codes = _huffman_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
     eob_code, eob_len = ac_codes[0x00]
-    bw = _BitWriter()
+    bw = BitWriter()
     pred_y = 0
     for b in range((w // 8) * (h // 8)):
         dc = ((doc_id * 5 + b) % 256) - 128
@@ -1586,7 +1504,7 @@ def synth_jpeg_color_payload(doc_id: int) -> bytes:
         + _jpeg_segment(0xC0, sof)
         + _jpeg_segment(0xC4, dht)
         + _jpeg_segment(0xDA, sos)
-        + bw.flush()
+        + _jpeg_entropy_bytes(bw)
         + b"\xff\xd9"
     )
 
@@ -1607,7 +1525,7 @@ def synth_jpeg_420_payload(doc_id: int) -> bytes:
     dc_codes = _huffman_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
     ac_codes = _huffman_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
     eob_code, eob_len = ac_codes[0x00]
-    bw = _BitWriter()
+    bw = BitWriter()
     pred_y = 0
     cols = w // 8
     for my in range(h // 16):
@@ -1640,7 +1558,7 @@ def synth_jpeg_420_payload(doc_id: int) -> bytes:
         + _jpeg_segment(0xC0, sof)
         + _jpeg_segment(0xC4, dht)
         + _jpeg_segment(0xDA, sos)
-        + bw.flush()
+        + _jpeg_entropy_bytes(bw)
         + b"\xff\xd9"
     )
 
@@ -1663,7 +1581,7 @@ def synth_jpeg_prog_payload(doc_id: int) -> bytes:
            for b in range(cols * (h // 8))]
     dc_codes = _huffman_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
     ac_codes = _huffman_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
-    bw1 = _BitWriter()                       # DC first, Al=1
+    bw1 = BitWriter()                       # DC first, Al=1
     pred = 0
     for dc in dcs:
         v = dc >> 1                          # arithmetic point transform
@@ -1674,10 +1592,10 @@ def synth_jpeg_prog_payload(doc_id: int) -> bytes:
         bw1.put(code, ln)
         if cat:
             bw1.put(diff if diff > 0 else diff + (1 << cat) - 1, cat)
-    bw2 = _BitWriter()                       # DC refine, Ah=1 Al=0
+    bw2 = BitWriter()                       # DC refine, Ah=1 Al=0
     for dc in dcs:
         bw2.put(dc & 1, 1)
-    bw3 = _BitWriter()                       # AC first, band 1..63
+    bw3 = BitWriter()                       # AC first, band 1..63
     eob_code, eob_len = ac_codes[0x00]
     for _ in dcs:
         bw3.put(eob_code, eob_len)           # all-zero band: EOB each
@@ -1694,9 +1612,9 @@ def synth_jpeg_prog_payload(doc_id: int) -> bytes:
         + _jpeg_segment(0xC2, struct.pack(">BHHB", 8, h, w, 1)
                         + bytes([1, 0x11, 0]))
         + _jpeg_segment(0xC4, dht)
-        + sos(0x00, 0, 0, 0, 1) + bw1.flush()
-        + sos(0x00, 0, 0, 1, 0) + bw2.flush()
-        + sos(0x00, 1, 63, 0, 0) + bw3.flush()
+        + sos(0x00, 0, 0, 0, 1) + _jpeg_entropy_bytes(bw1)
+        + sos(0x00, 0, 0, 1, 0) + _jpeg_entropy_bytes(bw2)
+        + sos(0x00, 1, 63, 0, 0) + _jpeg_entropy_bytes(bw3)
         + b"\xff\xd9"
     )
 
@@ -1734,8 +1652,9 @@ def _parse_dht(seg: bytes, dc_tabs: dict, ac_tabs: dict) -> None:
         if table is None:
             if len(_DHT_MEMO) >= _DHT_MEMO_MAX:
                 _DHT_MEMO.clear()
-            table = _HuffTable({(c, ln): s for s, (c, ln)
-                                in _huffman_codes(bits, vals).items()})
+            table = VlcTable({(c, ln): s for s, (c, ln)
+                              in _huffman_codes(bits, vals).items()},
+                             "jpeg huffman")
             _DHT_MEMO[(bits, vals)] = table
         (dc_tabs if tc == 0 else ac_tabs)[th] = table
         p += 17 + nv
@@ -1836,20 +1755,20 @@ def decode_jpeg(payload: bytes, want_pixels: bool = False):
     return None
 
 
-def _jpeg_decode_block(br: _BitReader, qtab: list, dc_tab: dict,
-                       ac_tab: dict, pred: int) -> tuple:
+def _jpeg_decode_block(br: _JpegBitReader, qtab: list, dc_tab: VlcTable,
+                       ac_tab: VlcTable, pred: int) -> tuple:
     """One entropy-coded 8×8 block → (spatial int block, new DC
     predictor). Shared by the grayscale path and each component of
     an interleaved color MCU."""
     zz = [0] * 64
-    cat = br.huff(dc_tab)
+    cat = dc_tab.decode(br)
     diff = _jpeg_extend(br.take(cat), cat) if cat else 0
     pred += diff
     zz[0] = pred * qtab[0]
     k = 1
     ac_seen = False
     while k < 64:
-        sym = br.huff(ac_tab)
+        sym = ac_tab.decode(br)
         if sym == 0x00:                      # EOB
             break
         if sym == 0xF0:                      # ZRL: 16 zeros
@@ -1905,7 +1824,7 @@ def _jpeg_scan(payload: bytes, pos: int, w: int, h: int,
     vmax = max(spec[4] for spec in plan)
     mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
     mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-    br = _BitReader(payload, pos)
+    br = _JpegBitReader(payload, pos)
     planes = [np.zeros((mcus_y * 8 * spec[4], mcus_x * 8 * spec[3]))
               for spec in plan]
     preds = [0] * ncomp
@@ -1960,8 +1879,8 @@ def _jpeg_planes_to_features(planes: list, samplings: list, w: int,
             "features": _chunk_means(pix)}
 
 
-def _jpeg_ac_first(br: _BitReader, ac_tab: dict, zz: list, ss: int,
-                   se: int, al: int, eobrun: int) -> int:
+def _jpeg_ac_first(br: _JpegBitReader, ac_tab: VlcTable, zz: list,
+                   ss: int, se: int, al: int, eobrun: int) -> int:
     """Progressive AC scan, first pass (T.81 G.1.2.2): spectral band
     [ss, se], coefficients point-transformed by Al, EOBn codes carry
     end-of-band runs across blocks."""
@@ -1969,7 +1888,7 @@ def _jpeg_ac_first(br: _BitReader, ac_tab: dict, zz: list, ss: int,
         return eobrun - 1
     k = ss
     while k <= se:
-        sym = br.huff(ac_tab)
+        sym = ac_tab.decode(br)
         r, s = sym >> 4, sym & 0x0F
         if s:
             k += r
@@ -1987,8 +1906,8 @@ def _jpeg_ac_first(br: _BitReader, ac_tab: dict, zz: list, ss: int,
     return eobrun
 
 
-def _jpeg_ac_refine(br: _BitReader, ac_tab: dict, zz: list, ss: int,
-                    se: int, al: int, eobrun: int) -> int:
+def _jpeg_ac_refine(br: _JpegBitReader, ac_tab: VlcTable, zz: list,
+                    ss: int, se: int, al: int, eobrun: int) -> int:
     """Progressive AC scan, refinement pass (T.81 G.1.2.3): each
     already-nonzero coefficient in the band consumes a correction
     bit; s=1 symbols insert new ±1<<Al coefficients at zero-history
@@ -1998,7 +1917,7 @@ def _jpeg_ac_refine(br: _BitReader, ac_tab: dict, zz: list, ss: int,
     k = ss
     if eobrun == 0:
         while k <= se:
-            sym = br.huff(ac_tab)
+            sym = ac_tab.decode(br)
             r, s = sym >> 4, sym & 0x0F
             val = 0
             if s == 0:
@@ -2091,7 +2010,7 @@ def _jpeg_progressive(payload: bytes, pos: int, w: int, h: int,
                 scomps.append((cid, tsel >> 4, tsel & 0x0F))
             ss, se, a = seg[1 + 2 * ns:4 + 2 * ns]
             ah, al = a >> 4, a & 0x0F
-            br = _BitReader(payload, pos + 2 + seg_len)
+            br = _JpegBitReader(payload, pos + 2 + seg_len)
             _jpeg_progressive_one_scan(
                 br, info, scomps, dc_tabs, ac_tabs,
                 ss, se, ah, al, dri, mcus_x, mcus_y)
@@ -2139,7 +2058,7 @@ def _jpeg_progressive(payload: bytes, pos: int, w: int, h: int,
                                     hmax, vmax, want_pixels)
 
 
-def _jpeg_progressive_one_scan(br: _BitReader, info: dict,
+def _jpeg_progressive_one_scan(br: _JpegBitReader, info: dict,
                                scomps: list, dc_tabs: dict,
                                ac_tabs: dict, ss: int, se: int,
                                ah: int, al: int, dri: int,
@@ -2205,15 +2124,15 @@ def _jpeg_progressive_one_scan(br: _BitReader, info: dict,
                                              al, eobrun)
 
 
-def _jpeg_dc_progress(br: _BitReader, dc_tab: dict | None, zz: list,
-                      ah: int, al: int, pred: int) -> int:
+def _jpeg_dc_progress(br: _JpegBitReader, dc_tab: VlcTable | None,
+                      zz: list, ah: int, al: int, pred: int) -> int:
     """One block's DC in a progressive DC scan: first pass decodes
     the point-transformed diff chain; refinement ORs in the next
     lower bit (two's complement, so negatives refine correctly)."""
     if ah == 0:
         if dc_tab is None:
             raise ValueError("jpeg: missing DC table")
-        cat = br.huff(dc_tab)
+        cat = dc_tab.decode(br)
         diff = _jpeg_extend(br.take(cat), cat) if cat else 0
         pred += diff
         zz[0] = pred << al
