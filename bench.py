@@ -162,10 +162,12 @@ HIGH_VARIANCE = {"dedup_minhash_lsh", "dedup_embedding_lsh",
                  # (pq r14; ivf_rp + emb_rp sf1 r15 local; the whole
                  # family in the r15 driver artifact's hot block, all
                  # refuted by same-code runs at other SFs/hours).
-                 # Their per-run floor is job-launch overhead from the
-                 # iterative Lloyd rounds — the profile most exposed
+                 # Their per-run floor was job-launch overhead from the
+                 # per-round Lloyd jobs — the profile most exposed
                  # to the host's noisy-neighbor CPU windows — so the
                  # median needs 5 samples to reject them mechanically.
+                 # Training now runs on the driver (similarity.py); the
+                 # membership stays until a re-measurement drops it.
                  "sim_knn_pq", "sim_knn_ivf", "sim_knn_ivfpq",
                  "sim_knn_ivf_rp"}
 HIGH_VARIANCE_REPEATS = 5
@@ -271,7 +273,7 @@ def main() -> None:
     if first is not None:
         first(spark, sf_dir).count()
         spark.catalog.clearCache()
-    # r16 measurement fix (documented in OPTIMIZATION_r16.md): also
+    # r16 measurement fix (its notes are in git history): also
     # pre-spawn the Python worker pool. The scattered pipelines now run
     # Arrow stages 32-way, and the FIRST such stage otherwise pays a
     # defaultParallelism-sized thundering herd of worker spawns (each

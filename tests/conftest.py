@@ -22,3 +22,20 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMALL
+
+
+@pytest.fixture
+def jobs_in_group(spark):
+    """``count(group, run)``: the number of Spark jobs ``run()``
+    launches, tagged by a job group (jobs submitted from other threads
+    do not carry the group and are not counted)."""
+    def count(group: str, run) -> int:
+        sc = spark.sparkContext
+        sc.setJobGroup(group, group)
+        try:
+            run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+    return count

@@ -1,7 +1,7 @@
 """r16 optimization pins: the vectorized codec fast paths must stay
 bit-identical to the general paths they short-circuit.
 
-Covers (OPTIMIZATION_r16.md):
+Covers (the r16 optimization notes, in git history):
 - FLAC: table CRCs, numpy Rice write, set-bit-index Rice read, cumsum
   FIXED reconstruction, interleaved MD5 fold;
 - JPEG/MPEG-1: the DC-only scalar IDCT short-circuit vs the full

@@ -506,3 +506,21 @@ def test_flagger_on_empty_corpus_bootstrap(spark, tmp_path):
         [(1, "alpha bravo charlie"), (2, "...!!!")],  # doc 2: no tokens
         "doc_id long, text string")
     assert flag_near_dups(inc, bands).count() == 0
+
+
+def test_cluster_canonical_warm_job_budget(spark, sf_dir, jobs_in_group):
+    """The edge table is built once, in one pass over the pairs, before
+    round 1: a warm dedup_cluster_canonical runs at most 26 Spark jobs
+    at the test scale (35 when the edges were a union that ran the
+    pair pipeline twice, materialized lazily inside round 1)."""
+    from university_data_lakehouse_spark.operators.dedup import (
+        dedup_cluster_canonical,
+    )
+
+    dedup_cluster_canonical(spark, sf_dir).count()
+    spark.catalog.clearCache()
+    jobs = jobs_in_group(
+        "job-budget-dedup_cluster_canonical",
+        lambda: dedup_cluster_canonical(spark, sf_dir).count())
+    spark.catalog.clearCache()
+    assert jobs <= 26, jobs

@@ -453,18 +453,8 @@ def _assert_abandoned(table):
     assert [f for _, _, fs in os.walk(table.data_dir) for f in fs] == []
 
 
-def _jobs_in_group(spark, group: str, run) -> int:
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        run()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_medallion_materialization_job_budget(spark, sf_dir, tmp_path):
+def test_medallion_materialization_job_budget(spark, sf_dir, tmp_path,
+                                               jobs_in_group):
     """Write–audit–publish: each asset is one staged write plus at most
     one fused check aggregate, so a warm materialization of the
     16-asset medallion graph stays within 4 jobs per asset. Checks
@@ -492,7 +482,7 @@ def test_medallion_materialization_job_budget(spark, sf_dir, tmp_path):
                                     catalog=TableCatalog(str(tmp_path / name)))
             assert len(res) == 16
             assert all(r.status == "ok" for r in res.values()), res
-        jobs[name] = _jobs_in_group(spark, f"job-budget-{name}", run)
+        jobs[name] = jobs_in_group(f"job-budget-{name}", run)
     assert jobs["warm"] <= 4 * 16, jobs
     assert jobs["wrapped"] == jobs["warm"], jobs
 

@@ -491,3 +491,84 @@ def test_ivf_rp_recall_at_k(spark, planted_dir):
     hits = sum(len(exact[q] & approx.get(q, set())) for q in exact)
     recall = hits / sum(len(exact[q]) for q in exact)
     assert recall >= 0.9, f"ivf_rp recall@{TOP_K} = {recall:.3f}"
+
+
+_QUANTIZER_ORACLES = {
+    "sim_knn_ivf": similarity._knn_ivf_oracle,
+    "sim_knn_pq": similarity._knn_pq_oracle,
+    "sim_knn_ivfpq": similarity._knn_ivfpq_oracle,
+    "sim_knn_ivf_rp": similarity._knn_ivf_rp_oracle,
+}
+
+
+@pytest.fixture(scope="module")
+def varied_norm_dir(tmp_path_factory):
+    """600 vectors around 16 directions with norms spread over
+    [0.5, 2): the medoid IVF update (max (score, vec_id), score =
+    |v| cos) then really moves the centroids. On the unit-norm test
+    corpora it does not — each seed wins its own cell, so the trained
+    centroids equal the normalized seeds whatever the sample."""
+    rng = np.random.default_rng(5)
+    dirs = rng.standard_normal((16, DIM))
+    rows = []
+    for i in range(600):
+        x = dirs[i % 16] + 0.5 * rng.standard_normal(DIM)
+        x *= rng.uniform(0.5, 2.0) / np.linalg.norm(x)
+        rows.append((i, x.astype(np.float32).tolist(), 0))
+    d = str(tmp_path_factory.mktemp("varied_norm"))
+    pd.DataFrame(rows, columns=["vec_id", "embedding", "label"]).astype(
+        {"vec_id": "int64", "label": "int32"}
+    ).to_parquet(os.path.join(d, "embeddings.parquet"))
+    return d
+
+
+def test_capped_training_changes_the_quantizer(spark, varied_norm_dir,
+                                               monkeypatch):
+    """The cap is live: training on the 64 smallest-md5 vectors instead
+    of the ~300 of the uncapped md5 sample yields other centroids, so
+    the capped parity test below is not the uncapped one in disguise."""
+    v = similarity._vectors(spark, varied_norm_dir)
+    full = similarity._training_set(v)
+    monkeypatch.setattr(similarity, "TRAIN_CAP", 64)
+    capped = similarity._training_set(v)
+    assert len(capped[0]) == capped[2] == 64 < full[2]
+    assert (similarity._ivf_centroids(v, capped)
+            != similarity._ivf_centroids(v, full))
+
+
+@pytest.mark.parametrize("key", sorted(_QUANTIZER_ORACLES))
+def test_capped_training_matches_rebuilt_oracle(spark, varied_norm_dir,
+                                                monkeypatch, key):
+    """Where the training cap binds: at the test scales the md5 sample
+    (~250 vectors) stays under TRAIN_CAP, so the parity suite never
+    exercises the LIMIT. With the cap at 64 the Spark side trains on
+    the 64 smallest-md5 vectors only, and must stay hash-equal to its
+    oracle rebuilt with the same cap."""
+    from tests.oracle_utils import compare
+
+    monkeypatch.setattr(similarity, "TRAIN_CAP", 64)
+    oracle = _QUANTIZER_ORACLES[key]()
+    assert "LIMIT 64" in oracle
+    compare(getattr(similarity, key)(spark, varied_norm_dir), oracle,
+            varied_norm_dir, name=f"{key}@cap64")
+
+
+# Warm Spark jobs per key at the test scale with driver-side training.
+# With one Spark job per Lloyd round the same keys ran 10 / 11 / 15
+# jobs (sim_knn_ivfpq's 15 include the 8 its training thread pool
+# submitted outside the caller's job group).
+_QUANTIZER_JOB_BUDGET = {"sim_knn_ivf": 5, "sim_knn_pq": 6,
+                         "sim_knn_ivfpq": 6}
+
+
+@pytest.mark.parametrize("key", sorted(_QUANTIZER_JOB_BUDGET))
+def test_quantizer_warm_job_budget(spark, sf_dir, jobs_in_group, key):
+    """Training is one collect, whatever IVF_ITERS/PQ_ITERS are: a warm
+    run stays within the measured job count."""
+    fn = getattr(similarity, key)
+    fn(spark, sf_dir).count()
+    spark.catalog.clearCache()
+    jobs = jobs_in_group(f"job-budget-{key}",
+                         lambda: fn(spark, sf_dir).count())
+    spark.catalog.clearCache()
+    assert jobs <= _QUANTIZER_JOB_BUDGET[key], jobs

@@ -710,13 +710,36 @@ def dedup_embedding_lsh_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_embedding_lsh(spark, sf_dir)
 
 
+def _edge_table(pairs: DataFrame) -> DataFrame:
+    """Both directions of every near-dup pair as distinct (src, dst)
+    edges, built ONCE and EAGERLY, before the first round: one pass
+    over ``pairs`` (an explode of the two orientations, not a union
+    that runs the pair pipeline twice), cached and materialized by a
+    count. Every round then reads the cache; built lazily, the edges
+    would materialize inside round 1's jobs instead. Measured on
+    perfbench's sf0.01 inputs: dedup_cluster_canonical 35 → 26 warm
+    Spark jobs."""
+    edges = (
+        pairs.select(F.explode(F.array(
+            F.struct(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
+            F.struct(F.col("id_b").alias("src"), F.col("id_a").alias("dst")),
+        )).alias("e"))
+        .select("e.src", "e.dst")
+        .distinct()
+        .cache()
+    )
+    edges.count()
+    return edges
+
+
 def cluster_pairs(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     """Connected components over near-dup pairs via min-label
     propagation: every doc in a component converges to the
     component's minimum doc_id as its canonical id.
 
     Iterative (non-SQL-expressible): each round joins the current
-    labels with the edge list and takes the min over neighbors —
+    labels with the edge list — materialized once, before round 1
+    (``_edge_table``) — and takes the min over neighbors —
     one shuffle per round on doc_id, converging in O(component
     diameter) rounds (near-dup components are shallow: dup clusters
     are cliques or short chains, so 2-3 rounds in practice; the
@@ -728,14 +751,7 @@ def cluster_pairs(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     at sf0.01). At 100 TB the localCheckpoint (executor-local blocks)
     would become a reliable checkpoint to object storage, same loop.
     """
-    edges = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .unionByName(
-            pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-        )
-        .distinct()
-        .cache()
-    )
+    edges = _edge_table(pairs)
     labels = (
         edges.select(F.col("src").alias("doc_id"))
         .distinct()
@@ -794,14 +810,7 @@ def cluster_pairs_shortcut(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     ever decrease, convergence probe and update share one materialized
     frame per round (same localCheckpoint discipline as
     cluster_pairs)."""
-    edges = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .unionByName(
-            pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-        )
-        .distinct()
-        .cache()
-    )
+    edges = _edge_table(pairs)
     labels = (
         edges.select(F.col("src").alias("doc_id"))
         .distinct()

@@ -134,7 +134,7 @@ _MAX_DECODE_PIXELS = 1 << 26
 # ungated full-width exchange regressed every cheap key, driver rows
 # decoded 0.98 s vs 0.47 at 8 cores, while the heavy entropy codecs
 # measurably want the full width even at sf0.1). Width sweep evidence
-# in OPTIMIZATION_r17.md.
+# is in git history (the r17 optimization notes).
 _MEDIA_BPT_HEAVY = 16 << 10   # per-bit entropy decode (MJPEG, FLAC):
 #                               ~0.7-0.8 ms/row — full width from
 #                               ~512 KiB of input up

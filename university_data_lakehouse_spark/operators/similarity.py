@@ -72,15 +72,15 @@ _SQL_VALID_VEC = (
 
 
 def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Deliberately NOT scatter()ed: this frame is cached compact and
-    # re-read by MANY small driver jobs (quantizer seed picks, Lloyd
-    # rounds, convergence probes) whose cost is per-task scheduling,
-    # not per-row work — widening the cache to cluster parallelism
-    # made every one of those tiny jobs launch 32 tasks and REGRESSED
-    # sim_knn_ivf/pq/ivfpq ~1.5-2x at sf0.1 (measured r16). The heavy
-    # per-pair fold stages scatter their own join input instead
-    # (sim_knn_bruteforce), or inherit shuffle parallelism from the
-    # band/candidate exchanges.
+    # Compact on purpose: neither scatter()ed nor cached here. The heavy
+    # per-row stages scatter their own input (the quantizer keys' encode
+    # pass, sim_knn_bruteforce's join) or inherit shuffle parallelism
+    # from the band/candidate exchanges; the quantizers' one training
+    # collect and the small query side read the narrow scan. Caching it
+    # in the quantizer keys cost one job per key and saved no time once
+    # training moved to the driver (interleaved A/B on 4 cores, summed
+    # medians of sim_knn_ivf/pq/ivfpq/ivf_rp: sf0.01 8.57 s cached vs
+    # 7.78 s uncached over 8 pairs, sf0.1 8.84 vs 8.05 s over 6).
     emb = load_table(spark, sf_dir, "embeddings").where(
         _valid_vec(F.col("embedding")))
     return emb.select(
@@ -153,6 +153,19 @@ def lsh_signature_expr(vec_col: F.Column) -> F.Column:
     return F.array(*bands)
 
 
+def _fold_dots(vecs: np.ndarray, mat: np.ndarray) -> np.ndarray:
+    """(N, K) dots of N row vectors with the K rows of ``mat`` as a
+    STRICT LEFT FOLD: acc starts at 0.0 and gains vecs[:, k] * mat[:, k]
+    one k at a time — vectorized across (rows x K), sequential over k,
+    the same IEEE operation order as F.aggregate and the oracles'
+    list_reduce. The one dot kernel of the LSH signature, the JL
+    projection, IVF cell scoring and driver-side IVF training."""
+    acc = np.zeros((len(vecs), mat.shape[0]))
+    for k in range(mat.shape[1]):
+        acc += vecs[:, k:k + 1] * mat[:, k][None, :]
+    return acc
+
+
 @pandas_udf(ArrayType(IntegerType()))
 def lsh_signature(v: pd.Series) -> pd.Series:
     """Band-packed signature: array of LSH_BANDS ints, band b's value
@@ -176,10 +189,7 @@ def lsh_signature(v: pd.Series) -> pd.Series:
     out = [[None] * LSH_BANDS for _ in range(len(v))]
     idxs, vecs = _clean_rows(v, EMB_DIM)
     if len(vecs):
-        acc = np.zeros((len(vecs), LSH_PLANES))
-        for k in range(EMB_DIM):                          # left fold over k
-            acc += vecs[:, k:k + 1] * mat[:, k][None, :]
-        bits = (acc > 0).astype(np.int64)                 # (N, P)
+        bits = (_fold_dots(vecs, mat) > 0).astype(np.int64)  # (N, P)
         bands = (bits.reshape(len(vecs), LSH_BANDS, LSH_BAND_ROWS)
                  * weights).sum(axis=2)
         for j, i in enumerate(idxs):
@@ -291,21 +301,57 @@ IVF_CELLS = 16           # coarse-quantizer centroids
 IVF_NPROBE = 2           # cells probed per query
 IVF_ITERS = 2            # Lloyd refinement rounds
 
+PQ_M = 4                     # subspaces
+PQ_SUB = EMB_DIM // PQ_M     # dims per subspace
+PQ_K = 8                     # codebook entries per subspace
+PQ_ITERS = 2                 # Lloyd rounds per subspace quantizer
+PQ_RERANK = 4 * TOP_K        # ADC candidates exact-re-ranked per query
+
 # Quantizer-training sample: Lloyd rounds see only vectors with
 # md5(vec_id) < this hex digit — a deterministic ~int(h,16)/16 fraction
-# ('8' = 1/2).  THIS is the 100 TB knob: training cost per round drops
-# from a full-corpus pass to sample_fraction x corpus (at 100 TB you'd
-# dial it to ~'0001…' for a fixed ~1M-vector training set), while
-# encoding/probing still covers every vector.  md5 is an engine-stable
-# string compare, and the md5-ordered seed pick is a subset of any
-# md5-prefix sample by construction, so the whole sampled training
-# replays bit-for-bit in the DuckDB oracle.
+# ('8' = 1/2). md5 is an engine-stable string compare, and the
+# md5-ordered seed pick is a subset of any md5-prefix sample by
+# construction, so the whole sampled training replays bit-for-bit in
+# the DuckDB oracle.
 TRAIN_SAMPLE_HEX = "8"
+# ...and at most this many of them: the FAISS practice of ~256 training
+# points per centroid held in one place (Johnson, Douze, Jégou,
+# "Billion-scale similarity search with GPUs"). The cap bounds the
+# driver-side training at any corpus size; encoding and probing still
+# cover every vector. The oracles apply the same ORDER BY md5 LIMIT.
+TRAIN_CAP = 256 * max(IVF_CELLS, PQ_K)
 
 
-def _train_sample(v: DataFrame) -> DataFrame:
-    return v.where(
-        F.md5(F.col("vec_id").cast("string")) < TRAIN_SAMPLE_HEX)
+def _training_set(v: DataFrame) -> tuple[np.ndarray, np.ndarray, int]:
+    """The quantizers' whole training input in ONE TakeOrdered job:
+    the TRAIN_CAP rows of smallest md5(vec_id), in that order, as
+    ``(vectors, vec_ids, n_sample)``. The seeds of both quantizers are
+    its first rows (an engine-independent pseudorandom pick), and the
+    Lloyd training sample is its first ``n_sample`` rows — the prefix
+    with md5 < TRAIN_SAMPLE_HEX. At most TRAIN_CAP x EMB_DIM doubles
+    (2 MiB) reach the driver."""
+    rows = (
+        v.select("vec_id", "v",
+                 F.md5(F.col("vec_id").cast("string")).alias("h"))
+        .orderBy("h")
+        .limit(TRAIN_CAP)
+        .collect()
+    )
+    mat = np.array([r["v"] for r in rows], dtype=np.float64).reshape(
+        len(rows), EMB_DIM)
+    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
+    return mat, ids, sum(r["h"] < TRAIN_SAMPLE_HEX for r in rows)
+
+
+def _last_per_group(*keys: np.ndarray) -> np.ndarray:
+    """Row indices of the lexicographically LARGEST (keys[1], keys[2],
+    ...) row within each distinct keys[0] — the driver-side twin of a
+    ``groupBy(keys[0]).agg(max(struct(...)))``."""
+    order = np.lexsort(keys[::-1])
+    g = keys[0][order]
+    last = np.ones(len(order), dtype=bool)
+    last[:-1] = g[1:] != g[:-1]
+    return order[last]
 
 
 def _clean_rows(v: pd.Series, dim: int):
@@ -358,9 +404,7 @@ def _centroid_scores(centroids: list[list[float]],
         out = [[None] * mat.shape[0] for _ in range(len(v))]
         idxs, vecs = _clean_rows(v, dim)
         if len(vecs):
-            acc = np.zeros((len(vecs), mat.shape[0]))
-            for k in range(dim):                          # left fold over k
-                acc += vecs[:, k:k + 1] * mat[:, k][None, :]
+            acc = _fold_dots(vecs, mat)
             for j, i in enumerate(idxs):
                 out[i] = acc[j].tolist()
         return pd.Series(out, dtype=object)
@@ -374,63 +418,37 @@ def _centroid_scores(centroids: list[list[float]],
     )
 
 
-def _seed_rows(v: DataFrame, k: int) -> list:
-    """The k rows of smallest md5(vec_id) (engine-independent
-    pseudorandom pick), sorted by that hash — ONE TakeOrdered job.
-    Shared by both quantizer trainers (r17, guide §2.4): because the
-    ordering does not depend on which trainer asks, the PQ_K-seed
-    list is exactly the prefix of the IVF_CELLS-seed list, so ivfpq
-    collects max(IVF_CELLS, PQ_K) rows once instead of running two
-    near-identical seed jobs."""
-    return (
-        v.select("v", F.md5(F.col("vec_id").cast("string")).alias("h"))
-        .orderBy("h")
-        .limit(k)
-        .collect()
-    )
-
-
-def _ivf_centroids(v: DataFrame, seeds: list | None = None) -> list[list[float]]:
+def _ivf_centroids(v: DataFrame, train: tuple | None = None) -> list[list[float]]:
     """Deterministic coarse quantizer: seed cells with the IVF_CELLS
     vectors of smallest md5(vec_id) (engine-independent pseudorandom
     pick), then IVF_ITERS Lloyd-style rounds over the deterministic
-    md5 TRAINING SAMPLE (TRAIN_SAMPLE_HEX — rounds cost
-    sample_fraction x corpus, not a full pass) — assignment is a map
-    stage with broadcast centroid literals; the update is ONE shuffle
-    (groupBy cell). Only the K x 64 centroid matrix ever reaches the
-    driver; the corpus never does.
+    md5 TRAINING SAMPLE (TRAIN_SAMPLE_HEX, capped at TRAIN_CAP). Both
+    come from ONE collect (``_training_set``, or ``train`` when the
+    caller already holds it), and the rounds run on the driver in
+    numpy — at most TRAIN_CAP vectors ever reach it, and no round
+    launches a Spark job. Assignment is the ``_fold_dots`` kernel the
+    encode pass uses (max score, ties → the larger cell, as
+    array_max over (score, cell) structs).
 
     The update is MEDOID-style: each cell's new centroid is the
     normalized member vector best aligned with the old centroid
-    (max_by on (score, vec_id)). Unlike a float mean — whose value
-    depends on partition summation order, and whose decimal-exact
-    rewrite is not cross-engine-stable (double→decimal casts round
-    shortest-repr HALF_UP in Spark vs true-binary half-even in
-    DuckDB, see functions/money.py) — max_by is exact and
-    order-independent, so the whole quantizer replays bit-for-bit in
-    the DuckDB oracle. It is also the cheaper agg at 100 TB: max_by
-    keeps one 64-float buffer per cell vs collect-or-mean state."""
-    if seeds is None:
-        seeds = _seed_rows(v, IVF_CELLS)
-    centroids = [_normalize([float(x) for x in r["v"]])
-                 for r in seeds[:IVF_CELLS]]
-    vt = _train_sample(v)   # Lloyd rounds train on the md5 sample only
+    (max (score, vec_id)). Unlike a float mean — whose value depends
+    on summation order, and whose decimal-exact rewrite is not
+    cross-engine-stable (double→decimal casts round shortest-repr
+    HALF_UP in Spark vs true-binary half-even in DuckDB, see
+    functions/money.py) — the max is exact and order-independent, so
+    the whole quantizer replays bit-for-bit in the DuckDB oracle."""
+    mat, ids, n = train if train is not None else _training_set(v)
+    centroids = [_normalize(r) for r in mat[:IVF_CELLS].tolist()]
+    vt, vid = mat[:n], ids[:n]
     for _ in range(IVF_ITERS):
-        best = F.array_max(_centroid_scores(centroids))
-        assigned = vt.select(
-            "vec_id", "v",
-            best.getField("cell").alias("cell"),
-            best.getField("score").alias("score"),
-        )
-        reps = (
-            assigned.groupBy("cell")
-            .agg(F.max_by("v", F.struct("score", "vec_id")).alias("rep"))
-            .collect()
-        )
-        new = list(centroids)
-        for r in reps:  # cells with no members keep their centroid
-            new[r["cell"]] = _normalize([float(x) for x in r["rep"]])
-        centroids = new
+        scores = _fold_dots(vt, np.array(centroids))
+        # argmax of the reversed row = the LAST maximum = larger cell
+        cell = scores.shape[1] - 1 - np.argmax(scores[:, ::-1], axis=1)
+        best = scores[np.arange(n), cell]
+        # cells with no members keep their centroid
+        for j in _last_per_group(cell, best, vid):
+            centroids[cell[j]] = _normalize(vt[j].tolist())
     return centroids
 
 
@@ -456,11 +474,11 @@ def sim_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     Recall vs brute force is additionally pytest-gated in
     tests/test_similarity.py.
     """
-    v = _vectors(spark, sf_dir).cache()
+    v = _vectors(spark, sf_dir)
     centroids = _ivf_centroids(v)
     # scatter BEFORE the assignment kernel: the exchange sits under
     # the per-row scoring and the probe join, so both parallelize off
-    # the compact training cache (§2.5); no-op on wide scans
+    # the compact scan (§2.5); no-op on wide scans
     corpus = scatter(v, min_input_bytes=2 << 20).withColumn(
         "cell", F.array_max(_centroid_scores(centroids)).getField("cell")
     )
@@ -495,11 +513,6 @@ def sim_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- product quantization ------------------------------------------------
-PQ_M = 4                     # subspaces
-PQ_SUB = EMB_DIM // PQ_M     # dims per subspace
-PQ_K = 8                     # codebook entries per subspace
-PQ_ITERS = 2                 # Lloyd rounds per subspace quantizer
-PQ_RERANK = 4 * TOP_K        # ADC candidates exact-re-ranked per query
 
 
 def _sqdist(sub_col: F.Column, cvals: list[float]) -> F.Column:
@@ -529,14 +542,27 @@ def pq_assign_expr(cb: list[list[list[float]]]) -> F.Column:
     return F.array(*codes, *dists)
 
 
-def pq_assign_kernel(cb: list[list[list[float]]]):
-    """Arrow/numpy twin of pq_assign_expr: vectorized across
+def _pq_sqdists(vecs: np.ndarray, cb: np.ndarray) -> np.ndarray:
+    """(N, PQ_M, K) squared L2 distances of every subvector to every
+    codebook entry (``cb`` is (PQ_M, K, PQ_SUB)): vectorized across
     (rows x subspaces x codes), SEQUENTIAL over the dimension axis —
     acc starts at 0.0 and gains (v_i - c_i)^2 one i at a time, the
     same IEEE operation order as F.aggregate and the oracle's
-    list_reduce, so codes and distances are bit-identical
-    (pytest-pinned). np.argmin tie-breaks to the first (smallest k)
-    exactly like array_position(array_min)."""
+    list_reduce. Shared by the encode kernel and driver-side
+    training."""
+    sub = vecs.reshape(len(vecs), PQ_M, PQ_SUB)
+    acc = np.zeros((len(vecs), PQ_M, cb.shape[1]))
+    for i in range(PQ_SUB):                       # strict left fold
+        diff = sub[:, :, None, i] - cb[None, :, :, i]
+        acc += diff * diff
+    return acc
+
+
+def pq_assign_kernel(cb: list[list[list[float]]]):
+    """Arrow/numpy twin of pq_assign_expr over ``_pq_sqdists``, so
+    codes and distances are bit-identical (pytest-pinned). np.argmin
+    tie-breaks to the first (smallest k) exactly like
+    array_position(array_min)."""
     C = np.array(cb, dtype=np.float64)            # (M, K, PQ_SUB)
 
     @pandas_udf(ArrayType(DoubleType()))
@@ -544,11 +570,7 @@ def pq_assign_kernel(cb: list[list[list[float]]]):
         res = [[None] * (2 * PQ_M) for _ in range(len(v))]
         idxs, vecs = _clean_rows(v, EMB_DIM)
         if len(vecs):
-            sub = vecs.reshape(len(vecs), PQ_M, PQ_SUB)
-            acc = np.zeros((len(vecs), PQ_M, PQ_K))
-            for i in range(PQ_SUB):               # strict left fold
-                diff = sub[:, :, None, i] - C[None, :, :, i]
-                acc += diff * diff
+            acc = _pq_sqdists(vecs, C)
             codes = np.argmin(acc, axis=2).astype(np.float64)
             dmin = np.min(acc, axis=2)
             out = np.concatenate([codes, dmin], axis=1)
@@ -560,56 +582,30 @@ def pq_assign_kernel(cb: list[list[list[float]]]):
 
 
 def _pq_codebooks(v: DataFrame,
-                  seeds: list | None = None) -> list[list[list[float]]]:
+                  train: tuple | None = None) -> list[list[list[float]]]:
     """Deterministic per-subspace quantizers: seeds are the PQ_K
-    subvectors of smallest md5(vec_id) per subspace, then PQ_ITERS
-    medoid-style Lloyd rounds — the new entry is the member subvector
-    CLOSEST to the old entry (min (dist, vec_id)): exact and
-    order-independent, so the whole training replays in SQL (same
-    argument as _ivf_centroids, including the md5 training sample —
-    rounds scan sample_fraction x corpus). Per round: one
-    Arrow-batched assign pass + a 32-row champion aggregate + a
-    32-row subvector fetch — only codebook-sized data ever reaches
-    the driver."""
-    # Seed pick: the PQ_K smallest-md5 vectors, sliced per subspace
-    # driver-side. Equivalent to (but far cheaper than) the previous
-    # per-m row_number window over the 4x-exploded subvector frame:
-    # md5(vec_id) does not depend on m, so every subspace's top-K is
-    # the SAME K vectors in the same order — one TakeOrdered job on v
-    # replaces an explode + full sort shuffle (guide §2.4).
-    if seeds is None:
-        seeds = _seed_rows(v, PQ_K)
-    cb: list[list[list[float]]] = [[None] * PQ_K for _ in range(PQ_M)]
-    for k, r in enumerate(seeds[:PQ_K]):
-        vec = [float(x) for x in r["v"]]
-        for m in range(PQ_M):
-            cb[m][k] = vec[m * PQ_SUB:(m + 1) * PQ_SUB]
-
-    vt = _train_sample(v)   # Lloyd rounds train on the md5 sample only
+    vectors of smallest md5(vec_id), sliced per subspace (md5(vec_id)
+    does not depend on the subspace, so every subspace seeds from the
+    same K vectors), then PQ_ITERS medoid-style Lloyd rounds — the new
+    entry is the member subvector CLOSEST to the old entry
+    (min (dist, vec_id)): exact and order-independent, so the whole
+    training replays in SQL (same argument as _ivf_centroids,
+    including the capped md5 training sample). Seeds and sample come
+    from the same single collect as the coarse quantizer's, and the
+    rounds run on the driver in numpy."""
+    mat, ids, n = train if train is not None else _training_set(v)
+    cb = mat[:PQ_K].reshape(-1, PQ_M, PQ_SUB).transpose(1, 0, 2).copy()
+    vt, vid = mat[:n], ids[:n]
+    sub = vt.reshape(n, PQ_M, PQ_SUB)
     for _ in range(PQ_ITERS):
-        scored = vt.select("vec_id", "v",
-                           pq_assign_kernel(cb)(F.col("v")).alias("cd"))
-        # the struct min orders on (d, vid); the champion's SUBVECTOR
-        # rides along in the same aggregate, so each round is ONE job
-        # returning PQ_M x PQ_K rows — nothing corpus-sized moves
-        entries = F.array(*[
-            F.struct(F.lit(m).alias("m"),
-                     F.col("cd")[m].cast("int").alias("k"),
-                     F.col("cd")[PQ_M + m].alias("d"),
-                     F.slice("v", m * PQ_SUB + 1, PQ_SUB).alias("s"))
-            for m in range(PQ_M)
-        ])
-        per_m = scored.select("vec_id", F.explode(entries).alias("e"))
-        champs = (
-            per_m.groupBy(F.col("e.m").alias("m"), F.col("e.k").alias("k"))
-            .agg(F.min(F.struct(F.col("e.d").alias("d"),
-                                F.col("vec_id").alias("vid"),
-                                F.col("e.s").alias("s"))).alias("w"))
-            .collect()
-        )
-        for r in champs:                        # empty codes keep entries
-            cb[r["m"]][int(r["k"])] = [float(x) for x in r["w"]["s"]]
-    return cb
+        d = _pq_sqdists(vt, cb)
+        code, dmin = np.argmin(d, axis=2), np.min(d, axis=2)
+        for m in range(PQ_M):                   # empty codes keep entries
+            # the champion of each code: min (d, vec_id), i.e. the
+            # last of max (-d, -vec_id)
+            for j in _last_per_group(code[:, m], -dmin[:, m], -vid):
+                cb[m, code[j, m]] = sub[j, m]
+    return cb.tolist()
 
 
 def _pq_codes(v: DataFrame, cb: list[list[list[float]]]) -> DataFrame:
@@ -638,7 +634,7 @@ def sim_knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     ADC in fixed subspace order) — the entire train/encode/score
     pipeline replays in DuckDB SQL, so the approximate path itself is
     ORACLE-CHECKED; recall vs brute force is pytest-gated."""
-    v = _vectors(spark, sf_dir).cache()
+    v = _vectors(spark, sf_dir)
     cb = _pq_codebooks(v)
     codes = _pq_codes(scatter(v, min_input_bytes=2 << 20), cb)  # §2.5
     q = v.where(F.col("vec_id") % QUERY_MOD == 0).select(
@@ -704,30 +700,16 @@ def sim_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     training, PQ training, encoding, probing, ADC, re-rank — replays
     in DuckDB SQL: ORACLE-CHECKED, like its two halves.
 
-    Local-bench note: at test SFs the runtime is dominated by the
-    FIXED training cost (both quantizers' seed/assign/update jobs —
-    flat across sf0.01→sf0.1 in the scaling section). At 100 TB the
-    index is trained/encoded ONCE and persisted; the per-query-batch
-    cost is the probed-cell code scan + re-rank, which is the part
-    that scales."""
-    v = _vectors(spark, sf_dir).cache()
-    # the two quantizer trainings are INDEPENDENT given v (PQ trains
-    # on raw vectors, not residuals — see docstring), but each is a
-    # chain of small sequential driver jobs; submitting them from two
-    # driver threads lets the second training's jobs back-fill the
-    # idle cores during the first's launch/collect gaps (guide §2.6).
-    # Results are unchanged: same jobs, same deterministic math.
-    from concurrent.futures import ThreadPoolExecutor  # noqa: PLC0415
-
-    # ONE shared seed job (r17, guide §2.4): both trainers order by
-    # the same md5(vec_id), so PQ's PQ_K seeds are exactly the prefix
-    # of IVF's IVF_CELLS seeds — collect the longer list once instead
-    # of two near-identical TakeOrdered jobs.
-    seeds = _seed_rows(v, max(IVF_CELLS, PQ_K))
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fut_c = pool.submit(_ivf_centroids, v, seeds)
-        fut_cb = pool.submit(_pq_codebooks, v, seeds)
-        centroids, cb = fut_c.result(), fut_cb.result()
+    Training is fixed-cost: one collect of at most TRAIN_CAP vectors
+    feeds both quantizers, whose Lloyd rounds then run on the driver.
+    At 100 TB the index is trained/encoded ONCE and persisted; the
+    per-query-batch cost is the probed-cell code scan + re-rank,
+    which is the part that scales."""
+    v = _vectors(spark, sf_dir)
+    # ONE collect trains both quantizers: PQ trains on raw vectors, not
+    # residuals (see docstring), so both read the same md5-ordered rows
+    train = _training_set(v)
+    centroids, cb = _ivf_centroids(v, train), _pq_codebooks(v, train)
     cd = pq_assign_kernel(cb)(F.col("v"))
     corpus = scatter(v, min_input_bytes=2 << 20).select(  # §2.5
         "vec_id",
@@ -973,10 +955,7 @@ def rp_project_kernel(v: pd.Series) -> pd.Series:
     out = [[None] * RP_DIM for _ in range(len(v))]
     idxs, vecs = _clean_rows(v, EMB_DIM)
     if len(vecs):
-        acc = np.zeros((len(vecs), mat.shape[0]))
-        for k in range(EMB_DIM):                        # left fold
-            acc += vecs[:, k:k + 1] * mat[:, k][None, :]
-        acc *= RP_SCALE                                 # exact 2^-2
+        acc = _fold_dots(vecs, mat) * RP_SCALE          # exact 2^-2
         for j, i in enumerate(idxs):
             out[i] = acc[j].tolist()
     return pd.Series(out, dtype=object)
@@ -1103,12 +1082,12 @@ def sim_knn_ivf_rp(spark: SparkSession, sf_dir: str) -> DataFrame:
     Fully deterministic and oracle-replayed: the projection is a
     strict left fold of the SQL-derived centroids, and assignment /
     probe tie-breaks mirror the IVF oracle ((score, cell) DESC)."""
-    v = _vectors(spark, sf_dir).cache()
+    v = _vectors(spark, sf_dir)
     centroids = _ivf_centroids(v)
     cp = [_project(c) for c in centroids]
     base = v.withColumn("vp", rp_project_kernel(F.col("v")))
     # §2.5: scatter under the projection+assignment kernels so encode
-    # and the probe join parallelize off the compact training cache
+    # and the probe join parallelize off the compact scan
     corpus = scatter(v, min_input_bytes=2 << 20).withColumn(
         "vp", rp_project_kernel(F.col("v"))
     ).withColumn(
@@ -1308,58 +1287,67 @@ def _sql_unit(l: str) -> str:
     return f"list_transform({l}, x -> x / {n})"
 
 
-def _ivf_training_ctes() -> tuple[list[str], str]:
-    """The shared SQL replay of _ivf_centroids (seed pick by md5
-    order + IVF_ITERS unrolled assignment/medoid-update rounds over
-    the md5 training sample): returns the CTE list and the name of
-    the final centroid table. Used verbatim by both the full-space
-    IVF oracle and the RP-probed variant — the quantizer TRAINING is
-    identical by construction."""
-    fold, sq, unit = _sql_fold64, _sql_sq, _sql_unit
+def _sql_train_ctes() -> str:
+    """The CTEs every quantizer oracle starts from: ``v`` (valid
+    vectors as doubles + norm) and ``tr``, the SQL twin of
+    _training_set — the TRAIN_CAP rows of smallest md5(vec_id) with
+    their md5 ``h`` and md5 rank ``rn``. Seeds are ``rn < K`` and the
+    Lloyd sample is ``h < TRAIN_SAMPLE_HEX``."""
     vv = "list_transform(embedding, x -> CAST(x AS DOUBLE))"
-    ctes = [f"""
+    return f"""
         v AS (
-            SELECT vec_id, {vv} AS vv, sqrt({sq(vv)}) AS nrm
+            SELECT vec_id, {vv} AS vv, sqrt({_sql_sq(vv)}) AS nrm
             FROM embeddings WHERE {_SQL_VALID_VEC}
         ),
-        vt AS (
-            SELECT * FROM v
-            WHERE md5(CAST(vec_id AS VARCHAR)) < '{TRAIN_SAMPLE_HEX}'
+        tr AS (
+            SELECT vec_id, vv, h, ROW_NUMBER() OVER (ORDER BY h) - 1 AS rn
+            FROM (SELECT vec_id, vv, md5(CAST(vec_id AS VARCHAR)) AS h
+                  FROM v ORDER BY h LIMIT {TRAIN_CAP})
+        )"""
+
+
+def _ivf_training_ctes(p: str = "") -> tuple[list[str], str]:
+    """The shared SQL replay of _ivf_centroids (seed pick by md5
+    order + IVF_ITERS unrolled assignment/medoid-update rounds over
+    the capped md5 training sample), reading ``tr``: returns the CTE
+    list (names prefixed with ``p``) and the name of the final
+    centroid table. Used verbatim by the full-space IVF oracle, the
+    RP-probed variant and IVF-PQ — the quantizer TRAINING is identical
+    by construction."""
+    fold, unit = _sql_fold64, _sql_unit
+    ctes = [f"""
+        {p}vt AS (
+            SELECT vec_id, vv FROM tr WHERE h < '{TRAIN_SAMPLE_HEX}'
         ),
-        seeds AS (
-            SELECT vv, ROW_NUMBER() OVER (
-                ORDER BY md5(CAST(vec_id AS VARCHAR))) - 1 AS cell
-            FROM v
-        ),
-        c0 AS (
-            SELECT cell, {unit('vv')} AS c
-            FROM seeds WHERE cell < {IVF_CELLS}
+        {p}c0 AS (
+            SELECT rn AS cell, {unit('vv')} AS c
+            FROM tr WHERE rn < {IVF_CELLS}
         )"""]
     for r in range(1, IVF_ITERS + 1):
-        prev = f"c{r - 1}"
+        prev = f"{p}c{r - 1}"
         ctes.append(f"""
-        a{r} AS (
+        {p}a{r} AS (
             SELECT vec_id, vv, cell, score FROM (
                 SELECT v.vec_id, v.vv, c.cell,
                        {fold('v.vv', 'c.c')} AS score,
                        ROW_NUMBER() OVER (PARTITION BY v.vec_id
                            ORDER BY {fold('v.vv', 'c.c')} DESC, c.cell DESC
                        ) AS rn
-                FROM vt v, {prev} c
+                FROM {p}vt v, {prev} c
             ) WHERE rn = 1
         ),
-        rep{r} AS (
+        {p}rep{r} AS (
             SELECT cell, vv FROM (
                 SELECT cell, vv, ROW_NUMBER() OVER (PARTITION BY cell
                            ORDER BY score DESC, vec_id DESC) AS rn
-                FROM a{r}
+                FROM {p}a{r}
             ) WHERE rn = 1
         ),
-        c{r} AS (
-            SELECT p.cell, COALESCE({unit(f'rep{r}.vv')}, p.c) AS c
-            FROM {prev} p LEFT JOIN rep{r} ON rep{r}.cell = p.cell
+        {p}c{r} AS (
+            SELECT p.cell, COALESCE({unit(f'{p}rep{r}.vv')}, p.c) AS c
+            FROM {prev} p LEFT JOIN {p}rep{r} ON {p}rep{r}.cell = p.cell
         )""")
-    return ctes, f"c{IVF_ITERS}"
+    return ctes, f"{p}c{IVF_ITERS}"
 
 
 def _knn_ivf_oracle() -> str:
@@ -1403,7 +1391,7 @@ def _knn_ivf_oracle() -> str:
                                       ORDER BY cosine DESC, neighbor_id) AS rank
             FROM scored
         ) WHERE rank <= {TOP_K}"""
-    return "WITH " + ",".join(ctes) + "," + tail
+    return "WITH " + ",".join([_sql_train_ctes(), *ctes, tail])
 
 
 ORACLES["sim_knn_ivf"] = _knn_ivf_oracle()
@@ -1481,98 +1469,102 @@ def _knn_ivf_rp_oracle() -> str:
                                       ORDER BY cosine DESC, neighbor_id) AS rank
             FROM scored
         ) WHERE rank <= {TOP_K}"""
-    return "WITH " + ",".join(ctes) + "," + tail
+    return "WITH " + ",".join([_sql_train_ctes(), *ctes, tail])
 
 
 ORACLES["sim_knn_ivf_rp"] = _knn_ivf_rp_oracle()
 
 
-def _knn_pq_oracle() -> str:
-    """Replay of sim_knn_pq: per-subspace seed pick by md5 order,
-    PQ_ITERS unrolled assign/medoid-update rounds, corpus encoding,
-    fixed-order ADC over the codes, top-PQ_RERANK candidates, exact
-    cosine re-rank. Same fold/tie-break discipline as the IVF oracle."""
+def _sql_subvec(vv: str) -> str:
+    """Subspace ``m``'s PQ_SUB-long slice of a 64-dim SQL list."""
+    return (f"list_transform(range(1, {PQ_SUB + 1}), "
+            f"i -> {vv}[m * {PQ_SUB} + i])")
 
-    def dist(s: str, c: str) -> str:
-        return (
-            f"list_reduce(list_transform(range(1, {PQ_SUB + 1}), "
-            f"i -> ({s}[i] - {c}[i]) * ({s}[i] - {c}[i])), (x, y) -> x + y)"
-        )
 
-    def dotf(a: str, b: str) -> str:
-        return (
-            f"list_reduce(list_transform(range(1, {PQ_SUB + 1}), "
-            f"i -> {a}[i] * {b}[i]), (x, y) -> x + y)"
-        )
+def _sql_subdist(s: str, c: str) -> str:
+    return (
+        f"list_reduce(list_transform(range(1, {PQ_SUB + 1}), "
+        f"i -> ({s}[i] - {c}[i]) * ({s}[i] - {c}[i])), (x, y) -> x + y)"
+    )
 
-    vv = "list_transform(embedding, x -> CAST(x AS DOUBLE))"
+
+def _sql_subdot(a: str, b: str) -> str:
+    return (
+        f"list_reduce(list_transform(range(1, {PQ_SUB + 1}), "
+        f"i -> {a}[i] * {b}[i]), (x, y) -> x + y)"
+    )
+
+
+_SQL_M = f"(SELECT unnest(range(0, {PQ_M})) AS m)"
+
+
+def _pq_training_ctes(p: str = "") -> tuple[list[str], str]:
+    """The shared SQL replay of _pq_codebooks, reading ``tr``: seeds
+    are the PQ_K smallest-md5 vectors sliced per subspace, then
+    PQ_ITERS unrolled assign/medoid-update rounds over the capped md5
+    training sample. Also defines ``sub`` (every valid vector's
+    subvectors, for encoding). Returns the CTE list (training names
+    prefixed with ``p``) and the name of the final codebook table."""
+    dist = _sql_subdist
     ctes = [f"""
-        v AS (
-            SELECT vec_id, {vv} AS vv, sqrt({_SELF_DOT}) AS nrm
-            FROM embeddings WHERE {_SQL_VALID_VEC}
-        ),
         sub AS (
-            SELECT vec_id, m,
-                   list_transform(range(1, {PQ_SUB + 1}),
-                                  i -> vv[m * {PQ_SUB} + i]) AS s
-            FROM v, (SELECT unnest(range(0, {PQ_M})) AS m)
+            SELECT vec_id, m, {_sql_subvec('vv')} AS s FROM v, {_SQL_M}
         ),
-        subt AS (
-            SELECT * FROM sub
-            WHERE md5(CAST(vec_id AS VARCHAR)) < '{TRAIN_SAMPLE_HEX}'
+        {p}subt AS (
+            SELECT vec_id, m, {_sql_subvec('vv')} AS s
+            FROM tr, {_SQL_M} WHERE h < '{TRAIN_SAMPLE_HEX}'
         ),
-        seeds AS (
-            SELECT m, s, ROW_NUMBER() OVER (PARTITION BY m
-                ORDER BY md5(CAST(vec_id AS VARCHAR))) - 1 AS k
-            FROM sub
-        ),
-        cb0 AS (SELECT m, k, s AS c FROM seeds WHERE k < {PQ_K})"""]
+        {p}cb0 AS (
+            SELECT m, rn AS k, {_sql_subvec('vv')} AS c
+            FROM tr, {_SQL_M} WHERE rn < {PQ_K}
+        )"""]
     for r in range(1, PQ_ITERS + 1):
-        prev = f"cb{r - 1}"
+        prev = f"{p}cb{r - 1}"
         ctes.append(f"""
-        a{r} AS (
+        {p}a{r} AS (
             SELECT vec_id, m, s, k, d FROM (
                 SELECT sub.vec_id, sub.m, sub.s, cb.k,
                        {dist('sub.s', 'cb.c')} AS d,
                        ROW_NUMBER() OVER (PARTITION BY sub.vec_id, sub.m
                            ORDER BY {dist('sub.s', 'cb.c')} ASC, cb.k ASC
                        ) AS rn
-                FROM subt sub JOIN {prev} cb ON cb.m = sub.m
+                FROM {p}subt sub JOIN {prev} cb ON cb.m = sub.m
             ) WHERE rn = 1
         ),
-        rep{r} AS (
+        {p}rep{r} AS (
             SELECT m, k, s FROM (
                 SELECT m, k, s, ROW_NUMBER() OVER (PARTITION BY m, k
                     ORDER BY d ASC, vec_id ASC) AS rn
-                FROM a{r}
+                FROM {p}a{r}
             ) WHERE rn = 1
         ),
-        cb{r} AS (
-            SELECT p.m, p.k, COALESCE(rep{r}.s, p.c) AS c
+        {p}cb{r} AS (
+            SELECT p.m, p.k, COALESCE({p}rep{r}.s, p.c) AS c
             FROM {prev} p
-            LEFT JOIN rep{r} ON rep{r}.m = p.m AND rep{r}.k = p.k
+            LEFT JOIN {p}rep{r} ON {p}rep{r}.m = p.m AND {p}rep{r}.k = p.k
         )""")
-    final = f"cb{PQ_ITERS}"
-    dot64 = ("list_reduce(list_transform(range(1, 65), "
-             "i -> q.vv[i] * t.vv[i]), (x, y) -> x + y)")
-    tail = f"""
+    return ctes, f"{p}cb{PQ_ITERS}"
+
+
+def _sql_pq_codes(cb: str) -> str:
+    """``codes``: every vector's nearest entry of codebook table
+    ``cb`` per subspace (first-min tie-break, as np.argmin)."""
+    return f"""
         codes AS (
             SELECT vec_id, m, k FROM (
                 SELECT sub.vec_id, sub.m, cb.k,
                        ROW_NUMBER() OVER (PARTITION BY sub.vec_id, sub.m
-                           ORDER BY {dist('sub.s', 'cb.c')} ASC, cb.k ASC
+                           ORDER BY {_sql_subdist('sub.s', 'cb.c')} ASC,
+                                    cb.k ASC
                        ) AS rn
-                FROM sub JOIN {final} cb ON cb.m = sub.m
+                FROM sub JOIN {cb} cb ON cb.m = sub.m
             ) WHERE rn = 1
-        ),
-        parts AS (
-            SELECT qs.vec_id AS query_id, cd.vec_id AS vec_id, qs.m,
-                   {dotf('qs.s', 'cb.c')} AS part
-            FROM sub qs
-            JOIN codes cd ON cd.m = qs.m AND cd.vec_id <> qs.vec_id
-            JOIN {final} cb ON cb.m = cd.m AND cb.k = cd.k
-            WHERE qs.vec_id % {QUERY_MOD} = 0
-        ),
+        )"""
+
+
+# fixed-order ADC over ``parts``, top-PQ_RERANK candidates, exact
+# cosine re-rank: the shared tail of the PQ and IVF-PQ oracles
+_SQL_ADC_TAIL = f"""
         adc AS (
             SELECT query_id, vec_id,
                    ((MAX(CASE WHEN m = 0 THEN part END)
@@ -1591,7 +1583,7 @@ def _knn_pq_oracle() -> str:
         ),
         scored AS (
             SELECT c.query_id, c.vec_id AS neighbor_id,
-                   {dot64} / (q.nrm * t.nrm) AS cosine
+                   {_sql_fold64('q.vv', 't.vv')} / (q.nrm * t.nrm) AS cosine
             FROM cand c
             JOIN v q ON q.vec_id = c.query_id
             JOIN v t ON t.vec_id = c.vec_id
@@ -1603,95 +1595,44 @@ def _knn_pq_oracle() -> str:
                    ) AS rank
             FROM scored
         ) WHERE rank <= {TOP_K}"""
-    return "WITH " + ",".join(ctes) + "," + tail
+
+
+def _knn_pq_oracle() -> str:
+    """Replay of sim_knn_pq: the PQ training CTEs, corpus encoding,
+    fixed-order ADC over the codes, top-PQ_RERANK candidates, exact
+    cosine re-rank. Same fold/tie-break discipline as the IVF oracle."""
+    ctes, final = _pq_training_ctes()
+    parts = f"""
+        parts AS (
+            SELECT qs.vec_id AS query_id, cd.vec_id AS vec_id, qs.m,
+                   {_sql_subdot('qs.s', 'cb.c')} AS part
+            FROM sub qs
+            JOIN codes cd ON cd.m = qs.m AND cd.vec_id <> qs.vec_id
+            JOIN {final} cb ON cb.m = cd.m AND cb.k = cd.k
+            WHERE qs.vec_id % {QUERY_MOD} = 0
+        )"""
+    return "WITH " + ",".join([_sql_train_ctes(), *ctes,
+                               _sql_pq_codes(final), parts, _SQL_ADC_TAIL])
 
 
 ORACLES["sim_knn_pq"] = _knn_pq_oracle()
 
 
 def _knn_ivfpq_oracle() -> str:
-    """Replay of the COMPOSED IVF-PQ pipeline: the IVF oracle's
-    seed/round/assignment CTEs (renamed i*), the PQ oracle's
-    seed/round/encoding CTEs (renamed p*), probes × in-cell codes as
-    the candidate set, fixed-order ADC, exact cosine re-rank."""
-
-    def fold64(a: str, b: str) -> str:
-        return (
-            "list_reduce(list_transform(range(1, 65), "
-            f"i -> {a}[i] * {b}[i]), (x, y) -> x + y)"
-        )
-
-    def sq(lst: str) -> str:
-        return (f"list_reduce(list_transform({lst}, x -> x * x), "
-                "(x, y) -> x + y)")
-
-    def unit(lst: str) -> str:
-        n = (f"(CASE WHEN sqrt({sq(lst)}) = 0 THEN 1.0 "
-             f"ELSE sqrt({sq(lst)}) END)")
-        return f"list_transform({lst}, x -> x / {n})"
-
-    def dist(s: str, c: str) -> str:
-        return (
-            f"list_reduce(list_transform(range(1, {PQ_SUB + 1}), "
-            f"i -> ({s}[i] - {c}[i]) * ({s}[i] - {c}[i])), (x, y) -> x + y)"
-        )
-
-    def dotf(a: str, b: str) -> str:
-        return (
-            f"list_reduce(list_transform(range(1, {PQ_SUB + 1}), "
-            f"i -> {a}[i] * {b}[i]), (x, y) -> x + y)"
-        )
-
-    vv = "list_transform(embedding, x -> CAST(x AS DOUBLE))"
-    ctes = [f"""
-        v AS (
-            SELECT vec_id, {vv} AS vv, sqrt({sq(vv)}) AS nrm
-            FROM embeddings WHERE {_SQL_VALID_VEC}
-        ),
-        vt AS (
-            SELECT * FROM v
-            WHERE md5(CAST(vec_id AS VARCHAR)) < '{TRAIN_SAMPLE_HEX}'
-        ),
-        iseeds AS (
-            SELECT vv, ROW_NUMBER() OVER (
-                ORDER BY md5(CAST(vec_id AS VARCHAR))) - 1 AS cell
-            FROM v
-        ),
-        ic0 AS (
-            SELECT cell, {unit('vv')} AS c
-            FROM iseeds WHERE cell < {IVF_CELLS}
-        )"""]
-    for r in range(1, IVF_ITERS + 1):
-        prev = f"ic{r - 1}"
-        ctes.append(f"""
-        ia{r} AS (
-            SELECT vec_id, vv, cell, score FROM (
-                SELECT v.vec_id, v.vv, c.cell,
-                       {fold64('v.vv', 'c.c')} AS score,
-                       ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                           ORDER BY {fold64('v.vv', 'c.c')} DESC, c.cell DESC
-                       ) AS rn
-                FROM vt v, {prev} c
-            ) WHERE rn = 1
-        ),
-        irep{r} AS (
-            SELECT cell, vv FROM (
-                SELECT cell, vv, ROW_NUMBER() OVER (PARTITION BY cell
-                           ORDER BY score DESC, vec_id DESC) AS rn
-                FROM ia{r}
-            ) WHERE rn = 1
-        ),
-        ic{r} AS (
-            SELECT p.cell, COALESCE({unit(f'irep{r}.vv')}, p.c) AS c
-            FROM {prev} p LEFT JOIN irep{r} ON irep{r}.cell = p.cell
-        )""")
-    ifinal = f"ic{IVF_ITERS}"
-    ctes.append(f"""
+    """Replay of the COMPOSED IVF-PQ pipeline: the IVF training CTEs
+    (prefixed i) and the PQ training CTEs (prefixed p) over the one
+    shared capped sample, cell assignment and probes, probes × in-cell
+    codes as the candidate set, fixed-order ADC, exact cosine
+    re-rank."""
+    fold = _sql_fold64
+    ictes, ifinal = _ivf_training_ctes("i")
+    pctes, pfinal = _pq_training_ctes("p")
+    cells = f"""
         cells AS (
             SELECT vec_id, cell FROM (
                 SELECT v.vec_id, c.cell,
                        ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                           ORDER BY {fold64('v.vv', 'c.c')} DESC, c.cell DESC
+                           ORDER BY {fold('v.vv', 'c.c')} DESC, c.cell DESC
                        ) AS rn
                 FROM v, {ifinal} c
             ) WHERE rn = 1
@@ -1700,109 +1641,28 @@ def _knn_ivfpq_oracle() -> str:
             SELECT query_id, cell FROM (
                 SELECT v.vec_id AS query_id, c.cell,
                        ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                           ORDER BY {fold64('v.vv', 'c.c')} DESC, c.cell DESC
+                           ORDER BY {fold('v.vv', 'c.c')} DESC, c.cell DESC
                        ) AS rn
                 FROM v, {ifinal} c
                 WHERE v.vec_id % {QUERY_MOD} = 0
             ) WHERE rn <= {IVF_NPROBE}
-        ),
-        sub AS (
-            SELECT vec_id, m,
-                   list_transform(range(1, {PQ_SUB + 1}),
-                                  i -> vv[m * {PQ_SUB} + i]) AS s
-            FROM v, (SELECT unnest(range(0, {PQ_M})) AS m)
-        ),
-        subt AS (
-            SELECT * FROM sub
-            WHERE md5(CAST(vec_id AS VARCHAR)) < '{TRAIN_SAMPLE_HEX}'
-        ),
-        pseeds AS (
-            SELECT m, s, ROW_NUMBER() OVER (PARTITION BY m
-                ORDER BY md5(CAST(vec_id AS VARCHAR))) - 1 AS k
-            FROM sub
-        ),
-        pcb0 AS (SELECT m, k, s AS c FROM pseeds WHERE k < {PQ_K})""")
-    for r in range(1, PQ_ITERS + 1):
-        prev = f"pcb{r - 1}"
-        ctes.append(f"""
-        pa{r} AS (
-            SELECT vec_id, m, s, k, d FROM (
-                SELECT sub.vec_id, sub.m, sub.s, cb.k,
-                       {dist('sub.s', 'cb.c')} AS d,
-                       ROW_NUMBER() OVER (PARTITION BY sub.vec_id, sub.m
-                           ORDER BY {dist('sub.s', 'cb.c')} ASC, cb.k ASC
-                       ) AS rn
-                FROM subt sub JOIN {prev} cb ON cb.m = sub.m
-            ) WHERE rn = 1
-        ),
-        prep{r} AS (
-            SELECT m, k, s FROM (
-                SELECT m, k, s, ROW_NUMBER() OVER (PARTITION BY m, k
-                    ORDER BY d ASC, vec_id ASC) AS rn
-                FROM pa{r}
-            ) WHERE rn = 1
-        ),
-        pcb{r} AS (
-            SELECT p.m, p.k, COALESCE(prep{r}.s, p.c) AS c
-            FROM {prev} p
-            LEFT JOIN prep{r} ON prep{r}.m = p.m AND prep{r}.k = p.k
-        )""")
-    pfinal = f"pcb{PQ_ITERS}"
-    dot64 = ("list_reduce(list_transform(range(1, 65), "
-             "i -> q.vv[i] * t.vv[i]), (x, y) -> x + y)")
-    tail = f"""
-        codes AS (
-            SELECT vec_id, m, k FROM (
-                SELECT sub.vec_id, sub.m, cb.k,
-                       ROW_NUMBER() OVER (PARTITION BY sub.vec_id, sub.m
-                           ORDER BY {dist('sub.s', 'cb.c')} ASC, cb.k ASC
-                       ) AS rn
-                FROM sub JOIN {pfinal} cb ON cb.m = sub.m
-            ) WHERE rn = 1
-        ),
+        )"""
+    parts = f"""
         cand0 AS (
             SELECT p.query_id, cc.vec_id
             FROM probes p
             JOIN cells cc ON cc.cell = p.cell AND cc.vec_id <> p.query_id
         ),
         parts AS (
-            SELECT c.query_id, c.vec_id, qs.m, {dotf('qs.s', 'cb.c')} AS part
+            SELECT c.query_id, c.vec_id, qs.m,
+                   {_sql_subdot('qs.s', 'cb.c')} AS part
             FROM cand0 c
             JOIN sub qs ON qs.vec_id = c.query_id
             JOIN codes cd ON cd.vec_id = c.vec_id AND cd.m = qs.m
             JOIN {pfinal} cb ON cb.m = cd.m AND cb.k = cd.k
-        ),
-        adc AS (
-            SELECT query_id, vec_id,
-                   ((MAX(CASE WHEN m = 0 THEN part END)
-                     + MAX(CASE WHEN m = 1 THEN part END))
-                    + MAX(CASE WHEN m = 2 THEN part END))
-                   + MAX(CASE WHEN m = 3 THEN part END) AS score
-            FROM parts GROUP BY 1, 2
-        ),
-        cand AS (
-            SELECT query_id, vec_id FROM (
-                SELECT query_id, vec_id, ROW_NUMBER() OVER (
-                    PARTITION BY query_id
-                    ORDER BY score DESC, vec_id) AS rn
-                FROM adc
-            ) WHERE rn <= {PQ_RERANK}
-        ),
-        scored AS (
-            SELECT c.query_id, c.vec_id AS neighbor_id,
-                   {dot64} / (q.nrm * t.nrm) AS cosine
-            FROM cand c
-            JOIN v q ON q.vec_id = c.query_id
-            JOIN v t ON t.vec_id = c.vec_id
-        )
-        SELECT query_id, neighbor_id, cosine, rank FROM (
-            SELECT query_id, neighbor_id, cosine,
-                   ROW_NUMBER() OVER (PARTITION BY query_id
-                                      ORDER BY cosine DESC, neighbor_id
-                   ) AS rank
-            FROM scored
-        ) WHERE rank <= {TOP_K}"""
-    return "WITH " + ",".join(ctes) + "," + tail
+        )"""
+    return "WITH " + ",".join([_sql_train_ctes(), *ictes, cells, *pctes,
+                               _sql_pq_codes(pfinal), parts, _SQL_ADC_TAIL])
 
 
 ORACLES["sim_knn_ivfpq"] = _knn_ivfpq_oracle()
