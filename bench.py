@@ -155,21 +155,14 @@ SF10_REPEATS = 3      # fewer for the secondary scaling sections —
 # wall time rides the host's noisy-neighbor CPU windows.
 HIGH_VARIANCE = {"dedup_minhash_lsh", "dedup_embedding_lsh",
                  "multimodal_jpeg", "multimodal_mpeg1",
-                 "multimodal_mjpeg", "multimodal_flac",
-                 # r16 (VERDICT r15 what's-wrong #3): the Lloyd-round
-                 # quantizer trainers joined after being bench-flagged
-                 # and adjudicated environmental THREE rounds running
-                 # (pq r14; ivf_rp + emb_rp sf1 r15 local; the whole
-                 # family in the r15 driver artifact's hot block, all
-                 # refuted by same-code runs at other SFs/hours).
-                 # Their per-run floor was job-launch overhead from the
-                 # per-round Lloyd jobs — the profile most exposed
-                 # to the host's noisy-neighbor CPU windows — so the
-                 # median needs 5 samples to reject them mechanically.
-                 # Training now runs on the driver (similarity.py); the
-                 # membership stays until a re-measurement drops it.
-                 "sim_knn_pq", "sim_knn_ivf", "sim_knn_ivfpq",
-                 "sim_knn_ivf_rp"}
+                 "multimodal_mjpeg", "multimodal_flac"}
+# sim_knn_pq/ivf/ivfpq/ivf_rp left the set once their quantizer
+# training moved onto the driver (similarity.py): the per-round Lloyd
+# jobs that made them noisy are gone. Re-measured in one 4-core bench
+# run, their (max - min) / median over repeats 2-4 was 0.06-0.13,
+# against quartiles 0.08 / 0.14 / 0.23 for the other 65 headline keys
+# timed 4 times; over repeats 1-4 it was 0.24-0.74 against 0.20 /
+# 0.38 / 0.63 — first-run jitter of the kind REPEATS already absorbs.
 HIGH_VARIANCE_REPEATS = 5
 
 # coverage (VERDICT r11 item 7): HEADLINE times 68 of the registry's

@@ -28,7 +28,9 @@ def sf_dir() -> str:
 def jobs_in_group(spark):
     """``count(group, run)``: the number of Spark jobs ``run()``
     launches, tagged by a job group (jobs submitted from other threads
-    do not carry the group and are not counted)."""
+    carry the group only when those threads inherit the caller's local
+    properties, as ``pyspark.util.inheritable_thread_target`` makes
+    them; other threads' jobs are not counted)."""
     def count(group: str, run) -> int:
         sc = spark.sparkContext
         sc.setJobGroup(group, group)

@@ -91,9 +91,7 @@ def _dig(d: dict, path: tuple[str, ...]) -> dict:
 # copy stays identical to bench.HIGH_VARIANCE.
 HIGH_VARIANCE = {"dedup_minhash_lsh", "dedup_embedding_lsh",
                  "multimodal_jpeg", "multimodal_mpeg1",
-                 "multimodal_mjpeg", "multimodal_flac",
-                 "sim_knn_pq", "sim_knn_ivf", "sim_knn_ivfpq",
-                 "sim_knn_ivf_rp"}
+                 "multimodal_mjpeg", "multimodal_flac"}
 
 ADJUDICATIONS_FILE = os.path.join(REPO, "BENCH_ADJUDICATIONS.json")
 

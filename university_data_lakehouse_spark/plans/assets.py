@@ -1,23 +1,28 @@
-"""Declarative asset graph with topological execution and
-quality-check gating.
+"""Declarative asset graph with dependency-driven concurrent execution
+and quality-check gating.
 
 Reference parity: Dagster's asset graph as wired by the three
 components (``s3_data_landing_component.py`` bronze assets,
 ``trino_iceberg_transform_component.py:116`` silver CTAS assets with
 ``data_quality_checks`` lists, ``gold_analytics_component.py:128``
 gold models). Here an Asset is a named Spark transform with declared
-deps, group, tags, and blocking checks; the graph toposorts and
-materializes with per-asset results, and a failed blocking check
-halts downstream materialization (the reference's
-``blocking=True`` check semantics).
+deps, group, tags, and blocking checks; the graph materializes each
+asset as soon as its upstreams have succeeded, independent assets at
+the same time (Dagster's default multiprocess executor runs
+independent steps concurrently too), with per-asset results in
+toposort order, and a failed blocking check halts downstream
+materialization (the reference's ``blocking=True`` check semantics).
 """
 
 from __future__ import annotations
 
+import time
 from collections.abc import Callable, Iterable
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
 
 from .checks import evaluate_checks
 
@@ -59,6 +64,9 @@ class AssetResult:
     # before this the dicts every plans/checks.py factory already
     # built were discarded at the orchestrator boundary
     check_meta: dict[str, dict] = field(default_factory=dict)
+    # wall seconds from the asset's submission to its result; None
+    # for an asset that was skipped (never submitted)
+    duration_s: float | None = None
 
 
 class AssetGraph:
@@ -116,8 +124,13 @@ class AssetGraph:
         catalog=None,
         lineage_send=None,
     ) -> dict[str, AssetResult]:
-        """Run assets in dependency order; a failed blocking check
-        skips everything downstream (reference blocking semantics).
+        """Materialize ``keys`` (default: every asset) and their
+        upstreams. An asset starts as soon as all of its upstreams
+        have finished ``ok``, so independent assets run at the same
+        time, on up to ``defaultParallelism`` driver threads; a
+        failed asset or blocking check skips only its downstream
+        (reference blocking semantics). Results come back in toposort
+        order.
 
         With a ``catalog`` (tables.TableCatalog) every asset goes
         through write–audit–publish, the engine's twin of the
@@ -138,11 +151,13 @@ class AssetGraph:
            version; a failed check deletes the staged files, so the
            published table keeps its last good version.
 
-        Downstream assets receive the read of the published files.
-        Without a catalog each asset frame is cached and the same
-        check evaluation (with a ``count(1)`` fused into its
-        aggregate) runs once over the cache; the caches are released
-        when the run ends.
+        Each asset commits its own table through its own atomic log
+        commit, so assets that run at the same time need no ordering
+        beyond their declared deps. Downstream assets receive the
+        read of the published files. Without a catalog each asset
+        frame is cached and the same check evaluation (with a
+        ``count(1)`` fused into its aggregate) runs once over the
+        cache; the caches are released when the run ends.
 
         With a ``lineage_send`` callable ``(path, payload) -> None``,
         each successfully-materialized asset's dependency edges are
@@ -151,12 +166,9 @@ class AssetGraph:
         materialization time (``gold_analytics_component.py:288``).
         Edges into skipped/failed assets are NOT pushed."""
         order = self.toposort(keys)
-        results: dict[str, AssetResult] = {}
         materialized: dict[str, DataFrame] = {}
-        blocked: set[str] = set()
         try:
-            self._run(spark, sf_dir, order, results, materialized,
-                      blocked, catalog)
+            results = self._run(spark, sf_dir, order, materialized, catalog)
         finally:
             # release the per-run caches: leaked InMemoryRelations
             # would otherwise shadow parquet scans (and their filter
@@ -176,51 +188,98 @@ class AssetGraph:
                     lineage_send(LINEAGE_PATH, p)
         return results
 
-    def _run(self, spark, sf_dir, order, results, materialized, blocked,
-             catalog) -> None:
-        for key in order:
-            if key in blocked:
-                results[key] = AssetResult(key, "skipped")
-                continue
-            asset = self.assets[key]
-            audited = None
+    def _run(self, spark, sf_dir, order, materialized, catalog
+             ) -> dict[str, AssetResult]:
+        """The scheduler: submit every waiting asset whose upstreams
+        are all ``ok``, mark every asset downstream of a failure
+        skipped, and collect results as assets finish. Only the
+        calling thread touches ``results``, ``materialized`` and
+        ``blocked``. Each task is wrapped in its own
+        ``inheritable_thread_target`` at submission, so its jobs carry
+        the caller's job group, description and tags, and no two
+        tasks share one local-properties object."""
+        results: dict[str, AssetResult] = {}
+        blocked: set[str] = set()
+        waiting = list(order)
+        running: dict = {}                # future → (key, submit time)
+        pool = ThreadPoolExecutor(spark.sparkContext.defaultParallelism,
+                                  thread_name_prefix="asset")
+        try:
+            while waiting or running:
+                for key in list(waiting):
+                    asset = self.assets[key]
+                    if key in blocked:
+                        results[key] = AssetResult(key, "skipped")
+                    elif all(d in results and results[d].status == "ok"
+                             for d in asset.deps):
+                        task = inheritable_thread_target(spark)(self._run_one)
+                        dep_dfs = {d: materialized[d] for d in asset.deps}
+                        fut = pool.submit(task, spark, sf_dir, asset,
+                                          dep_dfs, catalog)
+                        running[fut] = (key, time.perf_counter())
+                    else:
+                        continue
+                    waiting.remove(key)
+                done, _ = wait(running, return_when=FIRST_COMPLETED)
+                for fut in done:
+                    key, t0 = running.pop(fut)
+                    res, frame = fut.result()
+                    res.duration_s = time.perf_counter() - t0
+                    results[key] = res
+                    if frame is not None:
+                        materialized[key] = frame
+                    if res.status != "ok":
+                        blocked |= self.downstream_of(key)
+        finally:
+            # on an abnormal exit, queued assets never start and the
+            # running ones hand their caches to the caller's release
+            pool.shutdown(cancel_futures=True)
+            for fut, (key, _) in running.items():
+                if not fut.cancelled() and fut.exception() is None:
+                    frame = fut.result()[1]
+                    if frame is not None:
+                        materialized[key] = frame
+        return {key: results[key] for key in order}
 
-            def audit(frame, rows=None):
-                # frame: the staged read (catalog) or the cached frame
-                nonlocal audited
-                audited = (frame, *evaluate_checks(frame, asset.checks, rows))
-                return all(ok for ok, _ in audited[2].values())
+    def _run_one(self, spark, sf_dir, asset: Asset,
+                 dep_dfs: dict[str, DataFrame], catalog
+                 ) -> tuple[AssetResult, DataFrame | None]:
+        """Materialize one asset: build, expectations, then stage,
+        audit and publish (catalog) or cache and audit. Returns its
+        result and the frame the run keeps for it: the audited frame
+        downstream assets receive, or, without a catalog, the cache
+        to release even when the asset failed."""
+        audited = None
+        cached = None
 
-            try:
-                dep_dfs = {d: materialized[d] for d in asset.deps if d in materialized}
-                df = asset.fn(spark, sf_dir, **dep_dfs) if dep_dfs else asset.fn(spark, sf_dir)
-                df, exp_metrics, exp_failed = self._apply_expectations(
-                    asset, df)
-                if catalog is None:
-                    df = df.cache()
-                    materialized[key] = df
-                if catalog is None or exp_failed:
-                    # a failing expectation blocks the asset: nothing
-                    # is staged, but its checks still report
-                    passed = audit(df)
-                else:
-                    passed = catalog.write(key, df, mode="overwrite",
-                                           _audit=audit) is not None
-            except Exception as e:  # noqa: BLE001 — orchestrator boundary
-                results[key] = AssetResult(key, "error", error=str(e)[:500])
-                blocked |= self.downstream_of(key)
-                continue
-            frame, rows, outcomes = audited
-            ok = passed and not exp_failed
-            results[key] = AssetResult(
-                key, "ok" if ok else "check_failed", rows,
-                {name: verdict for name, (verdict, _) in outcomes.items()},
-                expectations=exp_metrics,
-                check_meta={name: meta for name, (_, meta) in outcomes.items()})
-            if ok:
-                materialized[key] = frame
+        def audit(frame, rows=None):
+            # frame: the staged read (catalog) or the cached frame
+            nonlocal audited
+            audited = (frame, *evaluate_checks(frame, asset.checks, rows))
+            return all(ok for ok, _ in audited[2].values())
+
+        try:
+            df = asset.fn(spark, sf_dir, **dep_dfs)
+            df, exp_metrics, exp_failed = self._apply_expectations(asset, df)
+            if catalog is None:
+                df = cached = df.cache()
+            if catalog is None or exp_failed:
+                # a failing expectation blocks the asset: nothing
+                # is staged, but its checks still report
+                passed = audit(df)
             else:
-                blocked |= self.downstream_of(key)
+                passed = catalog.write(asset.key, df, mode="overwrite",
+                                       _audit=audit) is not None
+        except Exception as e:  # noqa: BLE001 — orchestrator boundary
+            return AssetResult(asset.key, "error", error=str(e)[:500]), cached
+        frame, rows, outcomes = audited
+        ok = passed and not exp_failed
+        return AssetResult(
+            asset.key, "ok" if ok else "check_failed", rows,
+            {name: verdict for name, (verdict, _) in outcomes.items()},
+            expectations=exp_metrics,
+            check_meta={name: meta for name, (_, meta) in outcomes.items()},
+        ), frame if ok else cached
 
     @staticmethod
     def _apply_expectations(asset: Asset, df: DataFrame):

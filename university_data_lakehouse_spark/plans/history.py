@@ -1,7 +1,7 @@
 """Materialization run history as a managed table.
 
 Reference parity: Dagster's run records — every asset materialization
-(status, row count, per-check outcomes, timestamp) lands in an
+(status, row count, per-check outcomes, duration, timestamp) lands in an
 append-only ``meta/run_history`` managed table, so operators answer
 "when did this asset last publish, and why did Tuesday's run skip
 gold?" with a table query instead of log spelunking. The history
@@ -43,6 +43,7 @@ def record_run(
                 getattr(r, "expectations", {}), sort_keys=True),
             "error": r.error,
             "ts": ts.replace(tzinfo=None),
+            "duration_s": r.duration_s,
         }
         for r in results.values()
     ]
@@ -50,13 +51,14 @@ def record_run(
         rows,
         "run_id string, asset_key string, status string, rows long, "
         "checks_json string, expectations_json string, error string, "
-        "ts timestamp",
+        "ts timestamp, duration_s double",
     )
     table = catalog.table(HISTORY_TABLE)
     if not table.exists():
         return table.write(df, operation="bootstrap")
-    # evolve: history tables created before expectation tracking
-    # null-fill the new column instead of refusing the append
+    # evolve: history tables created before expectation tracking or
+    # per-asset durations null-fill the new columns instead of
+    # refusing the append
     return table.write(df, mode="append", evolve=True)
 
 
