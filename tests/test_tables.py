@@ -1268,3 +1268,191 @@ def test_compaction_under_concurrent_change_feed(spark, catalog,
     assert content(dst) == content(src) == (
         {(i, f"r{i}") for i in range(15)} | {(15, "race")})
     assert dst.read(spark).count() == 16       # no duplicate deliveries
+
+
+# ------------------------------------------------------ one publish path
+
+_ACTION_KEYS = {"version", "ts", "operation", "schema", "partition_by",
+                "constraints", "bloom_filters", "add", "remove"}
+
+
+def _meta_table(spark, catalog, name):
+    """A table with every piece of metadata a commit must carry: a
+    partition spec, a CHECK constraint and a bloom-filter column."""
+    t = catalog.table(name)
+    t.write(_day_df(spark, range(6)), partition_by=["day"],
+            constraints={"pos": "id >= 0"}, bloom_filter_columns=["id"])
+    return t
+
+
+def _day_df(spark, ids, val="v"):
+    return spark.createDataFrame(
+        [Row(id=i, day=f"d{i % 2}", val=f"{val}{i}") for i in ids])
+
+
+def _restore_after_drop(spark, t):
+    t.drop_check_constraint("pos")
+    return t.restore(spark, 1)
+
+
+_BASE_META = {"partition_by": ["day"], "constraints": {"pos": "id >= 0"},
+              "bloom_filters": ["id"]}
+
+_VERBS = {
+    "overwrite": (lambda s, t: t.write(_day_df(s, [7])), {}),
+    "append": (lambda s, t: t.write(_day_df(s, [7]), mode="append"), {}),
+    "merge": (lambda s, t: t.merge(_day_df(s, [1, 9], "m"), keys=["id"]), {}),
+    "merge_delete_unmatched": (
+        lambda s, t: t.merge(_day_df(s, [1, 9], "m"), keys=["id"],
+                             when_not_matched_by_source="delete"), {}),
+    "delete_cow": (lambda s, t: t.delete_where(s, {"id": (1, 2)}), {}),
+    "delete_mor": (lambda s, t: t.delete_where(s, {"id": (1, 2)},
+                                               merge_on_read=True), {}),
+    "update_cow": (lambda s, t: t.update_where(s, {"id": (1, 2)},
+                                               {"val": "u"}), {}),
+    "update_mor": (lambda s, t: t.update_where(s, {"id": (1, 2)},
+                                               {"val": "u"},
+                                               merge_on_read=True), {}),
+    "compact": (lambda s, t: t.compact(s), {}),
+    "repartition_layout": (lambda s, t: t.repartition_layout(s, None),
+                           {"partition_by": []}),
+    "add_constraint": (
+        lambda s, t: t.add_check_constraint(s, "short", "length(val) < 9"),
+        {"constraints": {"pos": "id >= 0", "short": "length(val) < 9"}}),
+    "drop_constraint": (lambda s, t: t.drop_check_constraint("pos"),
+                        {"constraints": {}}),
+    "restore": (_restore_after_drop, {}),
+}
+
+
+@pytest.mark.parametrize("verb", list(_VERBS))
+def test_every_verb_commits_the_full_metadata(spark, catalog, verb):
+    """Every mutating verb publishes through one action builder: each
+    action it commits carries the whole metadata key set, and the
+    resolved snapshot keeps the partition spec, constraints and bloom
+    columns unless the verb is the one that changes them."""
+    import json
+
+    run, changed = _VERBS[verb]
+    t = _meta_table(spark, catalog, f"tv_{verb}")
+    v = run(spark, t)
+    assert v == t.latest_version() > 1
+    for n in range(2, v + 1):
+        with open(os.path.join(t.log_dir, f"v{n:08d}.json")) as fh:
+            assert set(json.load(fh)) == _ACTION_KEYS
+    m = t.manifest()
+    assert {k: m[k] for k in _BASE_META} == {**_BASE_META, **changed}
+    assert t.read(spark).count() >= 1
+
+
+_RESOLVING_OPS = {
+    "write_overwrite": (lambda s, t: t.write(_day_df(s, [7])), 2),
+    "write_append": (lambda s, t: t.write(_day_df(s, [7]), mode="append"), 1),
+    **{name: (run, 1) for name, (run, _) in _VERBS.items()
+       if name not in ("overwrite", "append", "restore")},
+    "read_where": (lambda s, t: t.read_where(s, {"id": (1, 2)}), 1),
+    "row_count": (lambda s, t: t.row_count(), 1),
+}
+
+
+@pytest.mark.parametrize("op", list(_RESOLVING_OPS))
+def test_each_operation_resolves_its_snapshot_once(spark, catalog,
+                                                   monkeypatch, op):
+    """``manifest`` is the only reader of the log, and an operation
+    resolves its snapshot once and passes it down: an overwrite may
+    re-resolve the head it replaces at commit time, nothing else
+    resolves twice."""
+    run, budget = _RESOLVING_OPS[op]
+    t = _meta_table(spark, catalog, f"tr_{op}")
+    t.write(_day_df(spark, [6]), mode="append")     # a 2-version table
+    calls = []
+    real = ManagedTable.manifest
+
+    def counting(self, version=None):
+        calls.append(version)
+        return real(self, version)
+
+    monkeypatch.setattr(ManagedTable, "manifest", counting)
+    run(spark, t)
+    assert 1 <= len(calls) <= budget, calls
+
+
+def test_restore_brings_back_constraints_and_bloom_filters(spark, catalog):
+    """RESTORE re-installs the whole metadata of the restored version,
+    not only its schema and partition spec: a CHECK constraint dropped
+    after it gates writes again, and its bloom columns come back."""
+    from university_data_lakehouse_spark.tables import ConstraintViolation
+
+    t = catalog.table("t_restore_meta")
+    v1 = t.write(_df(spark, [(1, "a")]), constraints={"pos": "id > 0"},
+                 bloom_filter_columns=["val"])
+    t.drop_check_constraint("pos")
+    t.write(_df(spark, [(-1, "neg")]), mode="append")   # gate lifted
+    t.restore(spark, v1)
+    assert t.check_constraints() == {"pos": "id > 0"}
+    assert t.bloom_filter_columns() == ["val"]
+    with pytest.raises(ConstraintViolation, match="pos"):
+        t.write(_df(spark, [(-5, "x")]), mode="append")
+    assert {r.id for r in t.read(spark).collect()} == {1}
+
+
+def test_unreadable_checkpoint_is_skipped_and_torn_action_is_named(
+        spark, catalog):
+    """A checkpoint is a cache of the action log: a zero-byte one is
+    skipped for an older checkpoint (or a replay from v1) and replaced
+    by the next checkpoint write. A torn action file has no fallback
+    and raises CorruptLogError naming the file."""
+    import json
+
+    from university_data_lakehouse_spark.tables import CorruptLogError
+
+    t = catalog.table("t_ckpt_cache")
+    t.write(_df(spark, [(0, "v0")]).coalesce(1))
+    for i in range(1, 11):
+        t.write(_df(spark, [(i, f"v{i}")]).coalesce(1), mode="append")
+    assert t.latest_version() == 11 and t._checkpoints() == [10]
+    ckpt = os.path.join(t.log_dir, "v00000010.checkpoint.json")
+    open(ckpt, "w").close()
+    assert t.read(spark).count() == 11           # replayed from v1
+    assert t.row_count(version=10) == 10
+
+    # an older readable checkpoint is the fallback once v1.. are gone
+    t._write_checkpoint(5)
+    for v in range(1, 5):
+        os.unlink(os.path.join(t.log_dir, f"v{v:08d}.json"))
+    assert t.read(spark).count() == 11
+    t._write_checkpoint(10)                      # replaces the torn cache
+    with open(ckpt) as fh:
+        assert len(json.load(fh)["files"]) == 10
+
+    open(os.path.join(t.log_dir, "v00000011.json"), "w").close()
+    with pytest.raises(CorruptLogError, match="v00000011.json"):
+        t.read(spark)
+    with pytest.raises(FileNotFoundError):       # vacuumed stays missing
+        t.manifest(3)
+
+
+def test_commit_fsyncs_file_before_link_and_directory_after(
+        spark, catalog, monkeypatch):
+    """A commit is durable: the action's bytes are fsynced before its
+    name is linked into the log, and the log directory after."""
+    import stat
+
+    t = catalog.table("t_fsync")
+    t.write(_df(spark, [(1, "a")]))
+    events = []
+    real_fsync, real_link = os.fsync, os.link
+
+    def fsync(fd):
+        events.append("dir" if stat.S_ISDIR(os.fstat(fd).st_mode)
+                      else "file")
+        real_fsync(fd)
+
+    def link(src, dst):
+        events.append("link")
+        real_link(src, dst)
+
+    monkeypatch.setattr(os, "fsync", fsync)
+    monkeypatch.setattr(os, "link", link)
+    assert t.restore(spark, 1) == 2               # a metadata-only commit
+    assert events == ["file", "link", "dir"]

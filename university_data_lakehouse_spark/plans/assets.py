@@ -24,6 +24,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.util import inheritable_thread_target
 
+from ..tables.format import check_passes, count_violations
 from .checks import evaluate_checks
 
 
@@ -288,19 +289,12 @@ class AssetGraph:
         (possibly-filtered df, metrics, any_fail_violated)."""
         if not asset.expectations:
             return df, {}, False
-        from pyspark.sql import functions as F  # noqa: PLC0415
-
-        ok = {name: F.coalesce(F.expr(pred), F.lit(True))
-              for name, pred, _ in asset.expectations}
-        row = df.agg(*[
-            F.count(F.when(~ok[name], 1)).alias(name)
-            for name, _, _ in asset.expectations
-        ]).collect()[0]
-        metrics = {name: row[name] for name, _, _ in asset.expectations}
+        metrics = count_violations(
+            df, {name: pred for name, pred, _ in asset.expectations})
         failed = any(metrics[name] > 0
                      for name, _, action in asset.expectations
                      if action == "fail")
-        for name, _, action in asset.expectations:
+        for name, pred, action in asset.expectations:
             if action == "drop" and metrics[name] > 0:
-                df = df.where(ok[name])
+                df = df.where(check_passes(pred))
         return df, metrics, failed

@@ -13,6 +13,7 @@ replace 1:1.
 from .format import (  # noqa: F401
     CommitConflict,
     ConstraintViolation,
+    CorruptLogError,
     ManagedTable,
     TableCatalog,
 )

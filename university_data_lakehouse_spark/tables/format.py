@@ -17,6 +17,18 @@ Commit protocol (the public Delta/Iceberg core, minimally restated):
 - Old manifests are retained, so any prior version remains readable
   (time travel) until a retention job vacuums it.
 
+One publish path: every verb resolves its snapshot ONCE
+(:meth:`ManagedTable.manifest`, the only reader of the log) and hands
+that resolved manifest down to everything it calls. Every commit
+action is built by ``ManagedTable._publish`` from that base snapshot:
+the action carries the base's schema, partition spec, CHECK
+constraints and bloom-filter columns unless the verb changes them,
+and commits at base + 1 (``write`` alone takes its version, and an
+overwrite its removals, from the log at commit time — appends
+commute). A log file is written to a temp file that is fsynced
+before it is linked into place, and the log directory is fsynced
+after, so a published version is never empty after a power loss.
+
 Log layout (the public Delta log design): each commit ``v{N}.json``
 carries INCREMENTAL actions — ``add`` (new file entries) and
 ``remove`` (file names dropped from the snapshot) — so commit size is
@@ -24,9 +36,12 @@ O(changed files), not O(table). Every :data:`CHECKPOINT_INTERVAL`
 commits a full ``v{N}.checkpoint.json`` snapshot is also written;
 readers resolve a version from the newest checkpoint at-or-below it
 plus at most ``CHECKPOINT_INTERVAL`` tail actions, so snapshot
-resolution is O(interval), not O(commit history). Vacuum truncates
-the action tail below the oldest retained version once its data files
-are reclaimed, writing a fresh checkpoint there first.
+resolution is O(interval), not O(commit history). A checkpoint is
+only a cache of the actions: an unreadable one is skipped for an
+older checkpoint or a replay from v1, while a torn action file raises
+:class:`CorruptLogError` naming it. Vacuum truncates the action tail
+below the oldest retained version once its data files are reclaimed,
+writing a fresh checkpoint there first (replacing an unreadable one).
 
 Data skipping: every staged file records per-column min/max stats
 read from its parquet footer (int/float/string columns — the public
@@ -55,6 +70,7 @@ import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 _MANIFEST_FMT = "v{:08d}.json"
@@ -144,8 +160,6 @@ class PartitionSpecField:
     def expr(self):
         """Derived partition-value Column (None for identity — the raw
         column itself is the partition column)."""
-        from pyspark.sql import functions as F  # noqa: PLC0415
-
         if self.identity:
             return None
         if self.transform == "bucket":
@@ -175,6 +189,11 @@ class VersionExpiredError(RuntimeError):
     re-delivery converges to the same state."""
 
 
+class CorruptLogError(RuntimeError):
+    """A log file exists but cannot be parsed (a torn or truncated
+    commit action); the message names the file."""
+
+
 class SchemaMismatch(ValueError):
     """Append schema incompatible with the table schema."""
 
@@ -187,6 +206,90 @@ def _schema_names(schema: T.StructType) -> dict[str, str]:
     return {f.name: f.dataType.simpleString() for f in schema.fields}
 
 
+def check_passes(pred: str):
+    """SQL CHECK semantics: a row passes the predicate unless it
+    evaluates to FALSE (NULL/UNKNOWN passes)."""
+    return F.coalesce(F.expr(pred), F.lit(True))
+
+
+def count_violations(df: DataFrame, preds: dict[str, str]) -> dict[str, int]:
+    """{name: rows of ``df`` that fail the named SQL predicate} (see
+    :func:`check_passes`), all counted in ONE aggregate pass — shared by
+    table CHECK constraints and asset expectations."""
+    row = df.agg(*[
+        F.count(F.when(~check_passes(pred), 1)).alias(name)
+        for name, pred in preds.items()
+    ]).collect()[0]
+    return {name: row[name] for name in preds}
+
+
+#: Table metadata every commit action carries; a verb that does not
+#: change a key inherits it from the snapshot it was derived from.
+_META_KEYS = ("schema", "partition_by", "constraints", "bloom_filters")
+
+
+def _schema(m: dict) -> T.StructType:
+    return T.StructType.fromJson(m["schema"])
+
+
+def _float_columns(m: dict) -> set[str]:
+    return {f.name for f in _schema(m).fields
+            if isinstance(f.dataType, (T.FloatType, T.DoubleType))}
+
+
+def _may_overlap(entry: dict, bounds: dict[str, tuple],
+                 unprunable: set[str]) -> bool:
+    """Can this file hold a row inside ``bounds`` ({col: (lo, hi)}
+    closed intervals, None = unbounded)? False only when its footer
+    min/max PROVE disjointness on some column; missing stats and
+    ``unprunable`` columns (float/double — footer stats exclude NaN)
+    never prune."""
+    stats = entry.get("stats") or {}
+    for col, (lo, hi) in bounds.items():
+        rng = stats.get(col)
+        if col in unprunable or not rng:
+            continue
+        fmin, fmax = rng
+        if (hi is not None and fmin > hi) or (lo is not None and fmax < lo):
+            return False
+    return True
+
+
+def _bounds_condition(bounds: dict[str, tuple], predicate=None):
+    """The row predicate of ``bounds`` (AND the optional extra
+    ``predicate`` Column)."""
+    cond = F.lit(True)
+    for col, (lo, hi) in bounds.items():
+        if lo is not None:
+            cond = cond & (F.col(col) >= lo)
+        if hi is not None:
+            cond = cond & (F.col(col) <= hi)
+    return cond if predicate is None else cond & predicate
+
+
+def _set_columns(schema: T.StructType, set_exprs: dict, cond=None) -> list:
+    """Projection of ``schema`` with ``set_exprs`` ({column: Column or
+    literal}) applied — only on rows where ``cond`` holds, if given —
+    cast back to each column's type."""
+    def col(fld):
+        if fld.name not in set_exprs:
+            return F.col(fld.name)
+        val = set_exprs[fld.name]
+        if not isinstance(val, F.Column):
+            val = F.lit(val)
+        if cond is not None:
+            val = F.when(cond, val).otherwise(F.col(fld.name))
+        return val.cast(fld.dataType).alias(fld.name)
+
+    return [col(f) for f in schema.fields]
+
+
+def _file_key():
+    """Basename of the parquet file a row was read from — the file
+    half of a deletion-vector position."""
+    return F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
+
+
 class ManagedTable:
     def __init__(self, path: str):
         self.path = path
@@ -196,27 +299,27 @@ class ManagedTable:
     # ------------------------------------------------------------ log
 
     def exists(self) -> bool:
-        return os.path.isdir(self.log_dir) and bool(self._versions())
+        return bool(self._versions())
+
+    def _listing(self) -> tuple[list[int], list[int]]:
+        """(action versions, checkpoint versions), each sorted, from
+        one listing of the log directory."""
+        if not os.path.isdir(self.log_dir):
+            return [], []
+        versions, ckpts = [], []
+        suffix = ".checkpoint.json"
+        for f in os.listdir(self.log_dir):
+            if f.startswith("v") and f.endswith(suffix):
+                ckpts.append(int(f[1:-len(suffix)]))
+            elif f.startswith("v") and f.endswith(".json"):
+                versions.append(int(f[1:-5]))
+        return sorted(versions), sorted(ckpts)
 
     def _versions(self) -> list[int]:
-        if not os.path.isdir(self.log_dir):
-            return []
-        out = []
-        for f in os.listdir(self.log_dir):
-            if (f.startswith("v") and f.endswith(".json")
-                    and ".checkpoint." not in f):
-                out.append(int(f[1:-5]))
-        return sorted(out)
+        return self._listing()[0]
 
     def _checkpoints(self) -> list[int]:
-        if not os.path.isdir(self.log_dir):
-            return []
-        suffix = ".checkpoint.json"
-        return sorted(
-            int(f[1:-len(suffix)])
-            for f in os.listdir(self.log_dir)
-            if f.startswith("v") and f.endswith(suffix)
-        )
+        return self._listing()[1]
 
     def latest_version(self) -> int:
         vs = self._versions()
@@ -224,34 +327,52 @@ class ManagedTable:
             raise FileNotFoundError(f"no committed version at {self.path}")
         return vs[-1]
 
+    def _load(self, name: str) -> dict:
+        """Parse one log file. A missing file stays FileNotFoundError
+        (vacuumed, or never committed); a torn or unreadable one raises
+        CorruptLogError naming it."""
+        path = os.path.join(self.log_dir, name)
+        with open(path) as fh:
+            try:
+                entry = json.load(fh)
+            except ValueError as e:   # bad JSON or bad UTF-8
+                raise CorruptLogError(f"unreadable log file {path}: {e}") from e
+        if not isinstance(entry, dict) or "schema" not in entry:
+            raise CorruptLogError(f"log file {path} is not a commit action")
+        return entry
+
     def manifest(self, version: int | None = None) -> dict:
         """Resolved snapshot view of a version: newest checkpoint
         at-or-below it plus the incremental action tail — one
         checkpoint read + ≤ CHECKPOINT_INTERVAL action reads, never a
-        walk of the whole commit history."""
-        v = self.latest_version() if version is None else version
-        avail = set(self._versions())
-        below = [c for c in self._checkpoints() if c <= v]
+        walk of the whole commit history. A checkpoint is only a cache
+        of the actions: an unreadable one is skipped for the next older
+        one, or for a replay of the actions from v1. This is the only
+        method that resolves a snapshot from the log."""
+        versions, ckpts = self._listing()
+        if version is None and not versions:
+            raise FileNotFoundError(f"no committed version at {self.path}")
+        v = versions[-1] if version is None else version
         files: dict[str, dict] = {}
         meta: dict | None = None
-        if below:
-            base = max(below)
-            with open(os.path.join(self.log_dir,
-                                   _CKPT_FMT.format(base))) as fh:
-                meta = json.load(fh)
-            files = {f["name"]: f for f in meta["files"]}
-            start = base + 1
-        else:
-            start = 1   # action logs begin at version 1
+        start = 1   # action logs begin at version 1
+        for c in reversed([c for c in ckpts if c <= v]):
+            try:
+                meta = self._load(_CKPT_FMT.format(c))
+                files = {f["name"]: f for f in meta["files"]}
+            except (OSError, CorruptLogError, KeyError):
+                meta = None
+                continue
+            start = c + 1
+            break
+        avail = set(versions)
         for av in range(start, v + 1):
             if av not in avail:
                 raise FileNotFoundError(
                     f"version {v} of {self.path} is not resolvable: "
                     f"log entry v{av} is missing (vacuumed or never committed)"
                 )
-            with open(os.path.join(self.log_dir,
-                                   _MANIFEST_FMT.format(av))) as fh:
-                action = json.load(fh)
+            action = self._load(_MANIFEST_FMT.format(av))
             for name in action.get("remove", []):
                 files.pop(name, None)
             for entry in action.get("add", []):
@@ -278,7 +399,7 @@ class ManagedTable:
     # ----------------------------------------------------------- read
 
     def schema(self, version: int | None = None) -> T.StructType:
-        return T.StructType.fromJson(self.manifest(version)["schema"])
+        return _schema(self.manifest(version))
 
     def partition_by(self, version: int | None = None) -> list[str]:
         return list(self.manifest(version).get("partition_by") or [])
@@ -294,13 +415,11 @@ class ManagedTable:
         opened (the lakehouse metadata-query optimization: Delta and
         Iceberg both satisfy plain counts from their logs). Returns
         None when any referenced file predates row tracking."""
-        counts = [f.get("rows") for f in self.manifest(version)["files"]]
-        if any(c is None for c in counts):
+        files = self.manifest(version)["files"]
+        if any(f.get("rows") is None for f in files):
             return None
-        deleted = sum(d["rows"]
-                      for f in self.manifest(version)["files"]
-                      for d in (f.get("dv") or []))
-        return sum(counts) - deleted
+        return sum(f["rows"] - sum(d["rows"] for d in f.get("dv") or [])
+                   for f in files)
 
     def _enforce_constraints(self, df: DataFrame,
                              cons: dict[str, str]) -> None:
@@ -311,15 +430,7 @@ class ManagedTable:
         CHECK constraints; at 100 TB it pipelines with the write."""
         if not cons:
             return
-        from pyspark.sql import functions as F  # noqa: PLC0415
-
-        aggs = [
-            F.count(F.when(~F.coalesce(F.expr(pred), F.lit(True)), 1))
-            .alias(name)
-            for name, pred in cons.items()
-        ]
-        row = df.agg(*aggs).collect()[0]
-        bad = {name: row[name] for name in cons if row[name]}
+        bad = {n: c for n, c in count_violations(df, cons).items() if c}
         if bad:
             detail = ", ".join(
                 f"{n!r} ({cons[n]}): {c} rows" for n, c in bad.items())
@@ -358,7 +469,7 @@ class ManagedTable:
         Iceberg manifest-pruning behavior; at 100 TB this is the
         difference between touching one date directory and the table)."""
         m = self.manifest(version)
-        pby = m.get("partition_by") or []
+        pby = m["partition_by"]
         entries = m["files"]
         if partition_filter:
             unknown = set(partition_filter) - set(pby)
@@ -369,8 +480,26 @@ class ManagedTable:
                 )
             entries = [f for f in entries
                        if self._partition_match(f, partition_filter)]
-        schema = T.StructType.fromJson(m["schema"])
-        return self._read_files(spark, entries, schema, partitioned=bool(pby))
+        return self._read_snapshot(spark, m, entries)
+
+    def _read_snapshot(self, spark: SparkSession, m: dict,
+                       files: list[dict] | None = None) -> DataFrame:
+        """Read ``files`` (default: all) of the resolved snapshot ``m``
+        under its schema and partition layout."""
+        return self._read_files(spark, m["files"] if files is None else files,
+                                _schema(m), partitioned=bool(m["partition_by"]))
+
+    @staticmethod
+    def _split_by_stats(m: dict, bounds: dict[str, tuple]
+                        ) -> tuple[list[dict], list[dict]]:
+        """(files that MAY hold rows in ``bounds``, files whose footer
+        stats prove they cannot) of the resolved snapshot ``m``."""
+        unprunable = _float_columns(m)
+        touched, carried = [], []
+        for f in m["files"]:
+            (touched if _may_overlap(f, bounds, unprunable)
+             else carried).append(f)
+        return touched, carried
 
     def candidate_files(self, bounds: dict[str, tuple],
                         version: int | None = None) -> list[dict]:
@@ -380,28 +509,7 @@ class ManagedTable:
         scans. Exposed so callers (and tests) can measure pruning
         effectiveness without reading data. Float/double columns never
         prune (NaN sits outside footer stats)."""
-        m = self.manifest(version)
-        schema = T.StructType.fromJson(m["schema"])
-        unprunable = {
-            f.name for f in schema.fields
-            if isinstance(f.dataType, (T.FloatType, T.DoubleType))
-        }
-
-        def overlaps(entry: dict) -> bool:
-            stats = entry.get("stats") or {}
-            for col, (lo, hi) in bounds.items():
-                if col in unprunable:
-                    continue
-                rng = stats.get(col)
-                if not rng:
-                    continue
-                fmin, fmax = rng
-                if (hi is not None and fmin > hi) or (
-                        lo is not None and fmax < lo):
-                    return False
-            return True
-
-        return [f for f in m["files"] if overlaps(f)]
+        return self._split_by_stats(self.manifest(version), bounds)[0]
 
     def read_where(
         self,
@@ -421,18 +529,9 @@ class ManagedTable:
         Float/double columns never prune (NaN is outside footer
         stats — same soundness rule as merge)."""
         m = self.manifest(version)
-        schema = T.StructType.fromJson(m["schema"])
-        entries = self.candidate_files(bounds, version)
-        df = self._read_files(spark, entries, schema,
-                              partitioned=bool(m.get("partition_by")))
-        from pyspark.sql import functions as F  # noqa: PLC0415
-
-        for col, (lo, hi) in bounds.items():
-            if lo is not None:
-                df = df.where(F.col(col) >= lo)
-            if hi is not None:
-                df = df.where(F.col(col) <= hi)
-        return df
+        entries = self._split_by_stats(m, bounds)[0]
+        return self._read_snapshot(spark, m, entries).where(
+            _bounds_condition(bounds))
 
     # ---------------------------------------------------------- write
 
@@ -495,7 +594,7 @@ class ManagedTable:
                 name if rel_dir == "."
                 else "/".join([*rel_dir.split(os.sep), name])
             )
-            dest = os.path.join(self.data_dir, *rel_name.split("/"))
+            dest = self._data_path(rel_name)
             os.makedirs(os.path.dirname(dest), exist_ok=True)
             shutil.move(p, dest)
             stats, n_rows = _footer_stats(dest)
@@ -515,49 +614,87 @@ class ManagedTable:
         """Delete staged files no manifest will ever reference."""
         for f in staged:
             with contextlib.suppress(FileNotFoundError):
-                os.unlink(os.path.join(self.data_dir, *f["name"].split("/")))
+                os.unlink(self._data_path(f["name"]))
+
+    def _put(self, name: str, payload: dict, exclusive: bool = True) -> None:
+        """Durably write one log file: the payload goes to a temp file
+        that is fsynced BEFORE it is linked under ``name``, so a name a
+        reader can see never points at unwritten data; the directory is
+        fsynced after, so the new name survives a power loss too.
+        ``exclusive`` publishes with os.link (atomic create-if-absent:
+        FileExistsError if the name is taken); otherwise os.replace
+        swaps in the file whatever is there."""
+        tmp = os.path.join(self.log_dir, f".tmp-{uuid.uuid4().hex}")
+        with open(tmp, "w") as fh:
+            json.dump(payload, fh)
+            fh.flush()
+            os.fsync(fh.fileno())
+        target = os.path.join(self.log_dir, name)
+        if not exclusive:
+            os.replace(tmp, target)
+        else:
+            try:
+                os.link(tmp, target)
+            finally:
+                os.unlink(tmp)
+        fd = os.open(self.log_dir, os.O_RDONLY)
+        try:
+            os.fsync(fd)
+        finally:
+            os.close(fd)
 
     def _commit(self, version: int, action: dict) -> None:
         os.makedirs(self.log_dir, exist_ok=True)
-        tmp = os.path.join(self.log_dir, f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as fh:
-            json.dump(action, fh)
-        target = os.path.join(self.log_dir, _MANIFEST_FMT.format(version))
         try:
-            os.link(tmp, target)  # atomic create-if-absent
+            self._put(_MANIFEST_FMT.format(version), action)
         except FileExistsError as e:
             raise CommitConflict(
                 f"version {version} of {self.path} was committed concurrently"
             ) from e
-        finally:
-            os.unlink(tmp)
         if version % CHECKPOINT_INTERVAL == 0:
             self._write_checkpoint(version)
 
+    def _publish(self, base: dict | None, operation: str, add: list[dict],
+                 remove: list[str], version: int | None = None,
+                 **changed) -> int:
+        """Build and commit one action: the only place an action is
+        made. ``base`` is the resolved snapshot the verb derived its
+        change from (None for a table's first write); the action
+        carries its metadata (:data:`_META_KEYS`) except the keys in
+        ``changed``, and commits at ``base`` + 1 unless the caller
+        claims ``version`` itself."""
+        if version is None:
+            version = base["version"] + 1
+        self._commit(version, {
+            "version": version,
+            "ts": time.time(),
+            "operation": operation,
+            **{k: changed[k] if k in changed else base[k] for k in _META_KEYS},
+            "add": add,
+            "remove": remove,
+        })
+        return version
+
     def _write_checkpoint(self, version: int) -> None:
         """Materialize the resolved snapshot of ``version`` as a
-        checkpoint file (idempotent, best-effort: a concurrent writer
-        racing to the same checkpoint is harmless — both write the
-        identical resolved state)."""
-        target = os.path.join(self.log_dir, _CKPT_FMT.format(version))
-        if os.path.exists(target):
-            return
-        snap = self.manifest(version)
-        tmp = os.path.join(self.log_dir, f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as fh:
-            json.dump(snap, fh)
-        try:
-            os.link(tmp, target)
-        except FileExistsError:
-            pass
-        finally:
-            os.unlink(tmp)
+        checkpoint file (idempotent: a concurrent writer racing to the
+        same checkpoint writes the identical resolved state). A
+        readable checkpoint already there is kept; an unreadable one is
+        replaced."""
+        name = _CKPT_FMT.format(version)
+        with contextlib.suppress(OSError, CorruptLogError):
+            if "files" in self._load(name):
+                return
+        self._put(name, self.manifest(version), exclusive=False)
 
-    def _check_schema(self, df: DataFrame, evolve: bool) -> T.StructType:
+    def _check_schema(self, base: dict | None, df: DataFrame,
+                      evolve: bool) -> T.StructType:
+        """The schema ``df`` commits under on top of snapshot ``base``
+        (None: a new table takes df's own)."""
         new = df.schema
-        if not self.exists():
+        if base is None:
             return new
-        cur = self.schema()
+        cur = _schema(base)
         cur_names, new_names = _schema_names(cur), _schema_names(new)
         changed = {
             n: (cur_names[n], new_names[n])
@@ -577,12 +714,12 @@ class ManagedTable:
         fields = list(cur.fields) + [f for f in new.fields if f.name in added]
         return T.StructType(fields)
 
-    def _resolve_partition_spec(
-            self, partition_by: list[str] | None) -> list[str]:
-        """Inherit the table's spec when none is given; refuse a spec
-        change on an existing table (repartitioning is a rewrite, not
-        a write — same rule as Delta/Iceberg)."""
-        current = self.partition_by() if self.exists() else []
+    def _resolve_partition_spec(self, base: dict | None,
+                                partition_by: list[str] | None) -> list[str]:
+        """Inherit the spec of snapshot ``base`` when none is given;
+        refuse a spec change on an existing table (repartitioning is a
+        rewrite, not a write — same rule as Delta/Iceberg)."""
+        current = base["partition_by"] if base else []
         if partition_by is None:
             return current
         if current and list(partition_by) != current:
@@ -622,17 +759,18 @@ class ManagedTable:
         propagates."""
         if mode not in ("overwrite", "append"):
             raise ValueError(f"mode {mode!r}")
-        blooms = (self.bloom_filter_columns() if self.exists()
-                  else list(bloom_filter_columns or []))
-        cons = (self.check_constraints() if self.exists()
-                else dict(constraints or {}))
-        if self.exists() and constraints is not None and (
-                dict(constraints) != cons):
-            raise ValueError(
-                f"table {self.path} has constraints {cons}; use "
-                "add_check_constraint()/drop_check_constraint() to change")
+        base = self.manifest() if self.exists() else None
+        if base is None:
+            blooms = list(bloom_filter_columns or [])
+            cons = dict(constraints or {})
+        else:
+            blooms, cons = base["bloom_filters"], base["constraints"]
+            if constraints is not None and dict(constraints) != cons:
+                raise ValueError(
+                    f"table {self.path} has constraints {cons}; use "
+                    "add_check_constraint()/drop_check_constraint() to change")
         self._enforce_constraints(df, cons)
-        pby = self._resolve_partition_spec(partition_by)
+        pby = self._resolve_partition_spec(base, partition_by)
         fields = _spec_fields(pby)
         missing = [f.source for f in fields if f.source not in df.columns]
         if missing:
@@ -648,7 +786,7 @@ class ManagedTable:
                     "path/hash-encoded partition values cannot represent "
                     "NaN/precision soundly"
                 )
-        schema = self._check_schema(df, evolve)
+        schema = self._check_schema(base, df, evolve)
         staged = self._stage(df, partition_by=pby or None,
                              bloom_filters=blooms or None)
         if _audit is not None:
@@ -663,24 +801,19 @@ class ManagedTable:
             if not publish:
                 self._abandon(staged)
                 return None
-        base = self._versions()
-        version = (base[-1] + 1) if base else 1
+        # the version, and an overwrite's removals, come from the log
+        # as it stands now, not from the snapshot read at entry
+        vs = self._versions()
         removed: list[str] = []
-        if mode == "overwrite" and base:
-            removed = [f["name"]
-                       for f in self.manifest(base[-1])["files"]]
-        self._commit(version, {
-            "version": version,
-            "ts": time.time(),
-            "operation": operation or mode,
-            "schema": json.loads(schema.json()),
-            "partition_by": pby,
-            "constraints": cons,
-            "bloom_filters": blooms,
-            "add": staged,
-            "remove": removed,
-        })
-        return version
+        if mode == "overwrite" and vs:
+            head = (base if base and base["version"] == vs[-1]
+                    else self.manifest(vs[-1]))
+            removed = [f["name"] for f in head["files"]]
+        return self._publish(
+            base, operation or mode, staged, removed,
+            version=(vs[-1] + 1) if vs else 1,
+            schema=json.loads(schema.json()), partition_by=pby,
+            constraints=cons, bloom_filters=blooms)
 
     # ---------------------------------------------------------- merge
 
@@ -716,10 +849,7 @@ class ManagedTable:
         ``delete`` mode must see every target row, so it always
         rewrites the full snapshot.
         """
-        from pyspark.sql import functions as F  # noqa: PLC0415
-
-        spark = source.sparkSession
-        snapshot_version = self.latest_version()
+        m = self.manifest()
         if assert_unique_keys:
             dup = (
                 source.groupBy(*keys).count()
@@ -729,14 +859,11 @@ class ManagedTable:
                 raise ValueError(
                     f"merge source has duplicate keys {keys} at {self.path}"
                 )
-        manifest = self.manifest(snapshot_version)
-        schema = T.StructType.fromJson(manifest["schema"])
-        pby = manifest.get("partition_by") or []
+        schema = _schema(m)
+        pby = m["partition_by"]
         if when_not_matched_by_source == "delete":
-            target = self.read(spark, snapshot_version)
-            merged = source.select(*target.columns)
-            return self._rewrite(merged, "merge_delete_unmatched",
-                                 base_version=snapshot_version)
+            merged = source.select(*[fld.name for fld in schema.fields])
+            return self._rewrite(merged, "merge_delete_unmatched", base=m)
         # partition pruning (manifest-level, before any footer): SOUND
         # only when the partition columns are part of the merge keys —
         # then key equality pins a match to the source row's partition,
@@ -772,88 +899,60 @@ class ManagedTable:
             *[F.min(k).alias(f"mn_{k}") for k in keys],
             *[F.max(k).alias(f"mx_{k}") for k in keys],
         ).collect()[0]
-        # NaN soundness: Spark join/grouping treat NaN = NaN as a match,
-        # but parquet footer min/max EXCLUDE NaN — a file whose only
-        # matching rows are NaN-keyed would look disjoint. Float/double
-        # merge keys are therefore never pruned on.
-        unprunable = {
-            fld.name for fld in schema.fields
-            if fld.name in keys
-            and isinstance(fld.dataType, (T.FloatType, T.DoubleType))
-        }
+        # an empty source, or all-NULL keys (which never equi-join),
+        # matches nothing. NaN soundness: Spark join/grouping treat
+        # NaN = NaN as a match, but parquet footer min/max EXCLUDE NaN,
+        # so float/double merge keys are never pruned on.
+        live = all(bounds_row[f"mn_{k}"] is not None for k in keys)
+        key_bounds = {k: (bounds_row[f"mn_{k}"], bounds_row[f"mx_{k}"])
+                      for k in keys}
+        unprunable = _float_columns(m)
         touched, untouched = [], []
-        for f in manifest["files"]:
-            in_partition = True
-            if source_parts is not None and f.get("partition_values"):
-                fp = tuple(f["partition_values"].get(c) for c in pby)
-                in_partition = fp in source_parts
-            if in_partition and self._may_contain(
-                    f, keys, bounds_row, unprunable):
-                touched.append(f)
-            else:
-                untouched.append(f)
-        target = self._read_files(spark, touched, schema,
-                                  partitioned=bool(pby))
-        kept = target.join(source.select(*keys), on=keys, how="left_anti")
+        for f in m["files"]:
+            pv = f.get("partition_values")
+            in_partition = (source_parts is None or not pv
+                            or tuple(pv.get(c) for c in pby) in source_parts)
+            (touched if live and in_partition
+             and _may_overlap(f, key_bounds, unprunable)
+             else untouched).append(f)
+        kept = self._read_snapshot(source.sparkSession, m, touched).join(
+            source.select(*keys), on=keys, how="left_anti")
         # evolve=True is Delta's schema.autoMerge for MERGE: source may
         # ADD columns (kept rows and carried files null-fill them via
         # the evolved manifest schema) and may omit non-key columns
         # (replaced rows get null there — whole-row replace semantics);
         # type changes stay refused by the shared schema gate.
         if evolve:
-            self._check_schema(source, evolve=True)   # refuse type changes
+            self._check_schema(m, source, evolve=True)  # refuse type changes
             merged = kept.unionByName(source, allowMissingColumns=True)
         else:
             merged = kept.unionByName(
                 source.select(*[fld.name for fld in schema.fields]),
                 allowMissingColumns=False,
             )
-        return self._rewrite(merged, "merge", base_version=snapshot_version,
+        return self._rewrite(merged, "merge", base=m,
                              carry_files=untouched, evolve=evolve)
 
-    @staticmethod
-    def _may_contain(file_entry: dict, keys: list[str], bounds_row,
-                     unprunable: set[str] | None = None) -> bool:
-        """Can this file hold a row matching any source key? False
-        only when footer stats PROVE the ranges are disjoint for some
-        key (missing stats ⇒ conservative True; empty source ⇒ no
-        matches possible; ``unprunable`` keys — float/double, whose
-        footer stats exclude NaN — never prune)."""
-        stats = file_entry.get("stats") or {}
-        for k in keys:
-            smin, smax = bounds_row[f"mn_{k}"], bounds_row[f"mx_{k}"]
-            if k in (unprunable or ()):
-                # a float key can still witness an empty source (NaN
-                # bounds are non-null), so only the range test is skipped
-                if smin is None and smax is None:
-                    return False
-                continue
-            if smin is None:          # empty source: nothing matches
-                return False
-            rng = stats.get(k)
-            if not rng:
-                continue              # no stats -> cannot prune on k
-            fmin, fmax = rng
-            if smin > fmax or smax < fmin:
-                return False
-        return True
+    def _data_path(self, name: str) -> str:
+        return os.path.join(self.data_dir, *name.split("/"))
 
-    def _read_files(self, spark: SparkSession, files: list[dict],
-                    schema: T.StructType, partitioned: bool = False) -> DataFrame:
-        # explicit schema (from the manifest, like Delta's metadata)
-        # keeps mixed-generation files readable after column adds; for
-        # a partitioned layout, basePath makes Spark reconstitute the
-        # partition columns from the col=value path segments
-        from pyspark.sql import functions as F  # noqa: PLC0415
-
-        paths = [os.path.join(self.data_dir, *f["name"].split("/"))
-                 for f in files]
-        if not paths:
-            return spark.createDataFrame([], schema)
+    def _scan(self, spark: SparkSession, files: list[dict],
+              schema: T.StructType, partitioned: bool) -> DataFrame:
+        """Plain parquet scan of (non-empty) ``files``: the explicit
+        schema (from the manifest, like Delta's metadata) keeps
+        mixed-generation files readable after column adds; for a
+        partitioned layout, basePath makes Spark reconstitute the
+        partition columns from the col=value path segments."""
         reader = spark.read.schema(schema)
         if partitioned:
             reader = reader.option("basePath", self.data_dir)
-        out = reader.parquet(*paths)
+        return reader.parquet(*[self._data_path(f["name"]) for f in files])
+
+    def _read_files(self, spark: SparkSession, files: list[dict],
+                    schema: T.StructType, partitioned: bool = False) -> DataFrame:
+        if not files:
+            return spark.createDataFrame([], schema)
+        out = self._scan(spark, files, schema, partitioned)
         # merge-on-read DELETE: entries annotated with deletion
         # vectors get their dropped row POSITIONS filtered at read
         # time — one anti-join on (file basename, row_index) against
@@ -866,14 +965,9 @@ class ManagedTable:
             for n in d["files"]
         })
         if dv_names:
-            dv = spark.read.parquet(*[
-                os.path.join(self.data_dir, *n.split("/"))
-                for n in dv_names
-            ])
-            fkey = F.element_at(
-                F.split(F.col("_metadata.file_path"), "/"), -1)
+            dv = spark.read.parquet(*[self._data_path(n) for n in dv_names])
             out = (
-                out.withColumn("__dv_fk", fkey)
+                out.withColumn("__dv_fk", _file_key())
                 .withColumn("__dv_ri", F.col("_metadata.row_index"))
                 .join(
                     dv,
@@ -893,53 +987,37 @@ class ManagedTable:
     def _rewrite(self, df: DataFrame, operation: str,
                  base_version: int | None = None,
                  carry_files: list[dict] | None = None,
-                 evolve: bool = False) -> int:
-        """Snapshot rewrite committed at ``base_version + 1``:
+                 evolve: bool = False, base: dict | None = None) -> int:
+        """Snapshot rewrite committed at the base snapshot's version + 1:
         ``carry_files`` (stats-pruned untouched files) join the newly
         staged files in the manifest without being read or rewritten.
 
-        The base version is the snapshot the rewrite was DERIVED from
-        (captured at merge() entry): a concurrent commit landing after
-        that snapshot was read makes os.link collide and raises
-        CommitConflict, so the losing writer re-reads and retries —
-        rather than silently superseding the concurrent commit.
-        Rewrites go through the same ``_check_schema`` gate as
-        write(), so a merge cannot smuggle in a type change or column
-        drop that an append would refuse. The table's partition spec
-        is carried through: rewritten files land back under their
-        partition directories."""
-        if base_version is None:
-            base_version = self.latest_version()
-        base_manifest = self.manifest(base_version)
-        pby = base_manifest.get("partition_by") or []
-        cons = base_manifest.get("constraints") or {}
-        if cons and operation not in ("compact", "restore"):
-            # compact/restore only re-reference rows that already
-            # passed the gate; every data-changing rewrite re-validates
-            self._enforce_constraints(df, cons)
-        blooms = base_manifest.get("bloom_filters") or []
-        schema = self._check_schema(df, evolve=evolve)
-        staged = self._stage(df, partition_by=pby or None,
-                             bloom_filters=blooms or None)
-        version = base_version + 1
+        ``base`` is the resolved snapshot the rewrite was DERIVED from
+        (the manifest the verb pinned at entry; without it,
+        ``base_version`` is resolved, None = latest): a concurrent
+        commit landing after that snapshot was read makes os.link
+        collide and raises CommitConflict, so the losing writer
+        re-reads and retries — rather than silently superseding the
+        concurrent commit. Rewrites go through the same
+        ``_check_schema`` gate as write(), so a merge cannot smuggle in
+        a type change or column drop that an append would refuse. The
+        table's partition spec is carried through: rewritten files land
+        back under their partition directories."""
+        m = self.manifest(base_version) if base is None else base
+        if m["constraints"] and operation != "compact":
+            # compact only re-references rows that already passed the
+            # gate; every data-changing rewrite re-validates
+            self._enforce_constraints(df, m["constraints"])
+        schema = self._check_schema(m, df, evolve=evolve)
+        staged = self._stage(df, partition_by=m["partition_by"] or None,
+                             bloom_filters=m["bloom_filters"] or None)
         # carried (stats/partition-pruned) files simply stay in the
         # snapshot: the action only removes the files actually rewritten
         carry = {f["name"] for f in (carry_files or [])}
-        removed = [f["name"] for f in base_manifest["files"]
-                   if f["name"] not in carry]
-        self._commit(version, {
-            "version": version,
-            "ts": time.time(),
-            "operation": operation,
-            "schema": json.loads(schema.json()),
-            "partition_by": pby,
-            "constraints": cons,
-            "bloom_filters": blooms,
-            "add": staged,
-            "remove": removed,
-        })
-        return version
-
+        return self._publish(
+            m, operation, staged,
+            [f["name"] for f in m["files"] if f["name"] not in carry],
+            schema=json.loads(schema.json()))
 
     # ------------------------------------------------------ lifecycle
 
@@ -963,8 +1041,6 @@ class ManagedTable:
         literal array, so the rewrite job itself is one range shuffle.
         Numeric/timestamp/date columns only (strings have no
         meaningful footer-stats range locality to gain)."""
-        from pyspark.sql import functions as F  # noqa: PLC0415
-
         n_cells = 1 << self.ZORDER_BITS
         probs = [i / n_cells for i in range(1, n_cells)]
         numeric = df
@@ -1030,9 +1106,9 @@ class ManagedTable:
         the standard bin-pack-within-partition maintenance job)."""
         if cluster_by and zorder_by:
             raise ValueError("cluster_by and zorder_by are exclusive")
-        v = self.latest_version()
-        df = self.read(spark, v)
-        pby = self.partition_by(v)
+        m = self.manifest()
+        df = self._read_snapshot(spark, m)
+        pby = m["partition_by"]
         if zorder_by:
             z = self._zorder_expr(df, list(zorder_by))
             df = df.repartitionByRange(
@@ -1043,7 +1119,6 @@ class ManagedTable:
                 max(target_files, 1), *cluster_by
             ).sortWithinPartitions(*cluster_by)
         elif pby:
-            from pyspark.sql import functions as F  # noqa: PLC0415
             exprs = [
                 F.col(fld.source) if fld.identity else fld.expr()
                 for fld in _spec_fields(pby)
@@ -1051,7 +1126,7 @@ class ManagedTable:
             df = df.repartition(*exprs)
         else:
             df = df.coalesce(target_files)
-        return self._rewrite(df, "compact", base_version=v)
+        return self._rewrite(df, "compact", base=m)
 
     def maybe_compact(self, spark: SparkSession, max_files: int = 64,
                       target_files: int = 8,
@@ -1103,47 +1178,21 @@ class ManagedTable:
         at 100 TB); ``compact()`` later materializes the deletes and
         clears the vectors. Repeated MoR deletes stack (vectors
         accumulate per entry until a rewrite)."""
-        from pyspark.sql import functions as F  # noqa: PLC0415
-
-        version = self.latest_version()
-        m = self.manifest(version)
-        schema = T.StructType.fromJson(m["schema"])
-        unprunable = {
-            f.name for f in schema.fields
-            if isinstance(f.dataType, (T.FloatType, T.DoubleType))
-        }
-
-        def may_match(entry: dict) -> bool:
-            stats = entry.get("stats") or {}
-            for col, (lo, hi) in bounds.items():
-                if col in unprunable:
-                    continue
-                rng = stats.get(col)
-                if not rng:
-                    continue
-                fmin, fmax = rng
-                if (hi is not None and fmin > hi) or (
-                        lo is not None and fmax < lo):
-                    return False
-            return True
-
-        touched = [f for f in m["files"] if may_match(f)]
-        carried = [f for f in m["files"] if not may_match(f)]
-        cond = F.lit(True)
-        for col, (lo, hi) in bounds.items():
-            if lo is not None:
-                cond = cond & (F.col(col) >= lo)
-            if hi is not None:
-                cond = cond & (F.col(col) <= hi)
-        if predicate is not None:
-            cond = cond & predicate
+        m, touched, carried, cond = self._dml_scope(bounds, predicate)
         if merge_on_read:
             return self._delete_mor(spark, m, touched, cond)
-        target = self._read_files(spark, touched, schema,
-                                  partitioned=bool(m.get("partition_by")))
-        kept = target.where(~F.coalesce(cond, F.lit(False)))
-        return self._rewrite(kept, "delete", base_version=version,
-                             carry_files=carried)
+        kept = self._read_snapshot(spark, m, touched).where(~cond)
+        return self._rewrite(kept, "delete", base=m, carry_files=carried)
+
+    def _dml_scope(self, bounds: dict[str, tuple], predicate=None):
+        """The front half every row-level DML verb shares: pin the
+        latest snapshot, split its files by footer stats into (touched,
+        carried), and build the NULL-is-false row condition of
+        ``bounds`` AND ``predicate``."""
+        m = self.manifest()
+        touched, carried = self._split_by_stats(m, bounds)
+        cond = F.coalesce(_bounds_condition(bounds, predicate), F.lit(False))
+        return m, touched, carried, cond
 
     def _delete_mor(self, spark: SparkSession, m: dict,
                     touched: list[dict], cond,
@@ -1155,35 +1204,26 @@ class ManagedTable:
         _read_files' anti-join would lose row_index), so re-deleting
         an already-deleted row is a no-op rather than a double
         count."""
-        from pyspark.sql import functions as F  # noqa: PLC0415
-
-        schema = T.StructType.fromJson(m["schema"])
-        paths = [os.path.join(self.data_dir, *f["name"].split("/"))
-                 for f in touched]
-        if not paths:
+        if not touched:
             # no-op returns the PINNED snapshot version (same as the
             # no-new-hits branch below) — latest_version() re-read
             # here could surface a concurrent commit this delete
             # never observed, breaking OCC read-your-snapshot.
             return m["version"]
-        reader = spark.read.schema(schema)
-        if m.get("partition_by"):
-            reader = reader.option("basePath", self.data_dir)
-        raw = reader.parquet(*paths).select(
-            F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
-            .alias("file_key"),
+        schema = _schema(m)
+        raw = self._scan(spark, touched, schema,
+                         bool(m["partition_by"])).select(
+            _file_key().alias("file_key"),
             F.col("_metadata.row_index").alias("row_index"),
             "*",
         )
-        hits = raw.where(F.coalesce(cond, F.lit(False))).select(
-            "file_key", "row_index")
+        hits = raw.where(cond).select("file_key", "row_index")
         # subtract positions already deleted by earlier vectors
         prior = sorted({n for f in touched
                         for d in (f.get("dv") or [])
                         for n in d["files"]})
         if prior:
-            pdv = spark.read.parquet(*[
-                os.path.join(self.data_dir, *n.split("/")) for n in prior])
+            pdv = spark.read.parquet(*[self._data_path(n) for n in prior])
             hits = hits.join(pdv, ["file_key", "row_index"], "left_anti")
         per_file = {r["file_key"]: r["n"] for r in
                     hits.groupBy("file_key")
@@ -1205,22 +1245,11 @@ class ManagedTable:
         if set_exprs is not None:
             matched = raw.join(hits, ["file_key", "row_index"],
                                "left_semi")
-
-            def upd(fld):
-                if fld.name not in set_exprs:
-                    return F.col(fld.name)
-                val = set_exprs[fld.name]
-                if not isinstance(val, F.Column):
-                    val = F.lit(val)
-                return val.cast(fld.dataType).alias(fld.name)
-
-            post = matched.select(*[upd(f) for f in schema.fields])
-            self._enforce_constraints(post, m.get("constraints") or {})
+            post = matched.select(*_set_columns(schema, set_exprs))
+            self._enforce_constraints(post, m["constraints"])
             post_entries = self._stage(
-                post,
-                partition_by=(m.get("partition_by") or None),
-                bloom_filters=(m.get("bloom_filters") or None),
-            )
+                post, partition_by=m["partition_by"] or None,
+                bloom_filters=m["bloom_filters"] or None)
         # each entry's "dv" is a list of {"files": [dv parquet names],
         # "rows": n_deleted_in_this_entry} — one item per MoR commit
         # that hit the entry; readers union every listed file, the
@@ -1235,20 +1264,9 @@ class ManagedTable:
                 {"files": dv_names, "rows": per_file[k]}
             ]
             updated.append(e)
-        version = m["version"] + 1
-        self._commit(version, {
-            "version": version,
-            "ts": time.time(),
-            "operation": ("update[mor]" if set_exprs is not None
-                          else "delete[mor]"),
-            "schema": m["schema"],
-            "partition_by": m.get("partition_by") or [],
-            "constraints": m.get("constraints") or {},
-            "bloom_filters": m.get("bloom_filters") or [],
-            "add": updated + post_entries,
-            "remove": [f["name"] for f in updated],
-        })
-        return version
+        return self._publish(
+            m, "update[mor]" if set_exprs is not None else "delete[mor]",
+            updated + post_entries, [f["name"] for f in updated])
 
     def update_where(
         self,
@@ -1270,59 +1288,13 @@ class ManagedTable:
         vector (touched bytes stay put) and the post-image rows land
         in NEW files appended by the same commit — write cost
         O(updated rows), not O(touched bytes)."""
-        from pyspark.sql import functions as F  # noqa: PLC0415
-
-        version = self.latest_version()
-        m = self.manifest(version)
-        schema = T.StructType.fromJson(m["schema"])
-        unprunable = {
-            f.name for f in schema.fields
-            if isinstance(f.dataType, (T.FloatType, T.DoubleType))
-        }
-
-        def may_match(entry: dict) -> bool:
-            stats = entry.get("stats") or {}
-            for col, (lo, hi) in bounds.items():
-                if col in unprunable:
-                    continue
-                rng = stats.get(col)
-                if not rng:
-                    continue
-                fmin, fmax = rng
-                if (hi is not None and fmin > hi) or (
-                        lo is not None and fmax < lo):
-                    return False
-            return True
-
-        touched = [f for f in m["files"] if may_match(f)]
-        carried = [f for f in m["files"] if not may_match(f)]
-        cond = F.lit(True)
-        for col, (lo, hi) in bounds.items():
-            if lo is not None:
-                cond = cond & (F.col(col) >= lo)
-            if hi is not None:
-                cond = cond & (F.col(col) <= hi)
-        if predicate is not None:
-            cond = cond & predicate
-        cond = F.coalesce(cond, F.lit(False))
+        m, touched, carried, cond = self._dml_scope(bounds, predicate)
         if merge_on_read:
             return self._delete_mor(spark, m, touched, cond,
                                     set_exprs=set_exprs)
-        target = self._read_files(spark, touched, schema,
-                                  partitioned=bool(m.get("partition_by")))
-
-        def col_for(fld):
-            if fld.name not in set_exprs:
-                return F.col(fld.name)
-            val = set_exprs[fld.name]
-            if not isinstance(val, F.Column):
-                val = F.lit(val)
-            return (F.when(cond, val).otherwise(F.col(fld.name))
-                    .cast(fld.dataType).alias(fld.name))
-
-        updated = target.select(*[col_for(f) for f in schema.fields])
-        return self._rewrite(updated, "update", base_version=version,
-                             carry_files=carried)
+        updated = self._read_snapshot(spark, m, touched).select(
+            *_set_columns(_schema(m), set_exprs, cond))
+        return self._rewrite(updated, "update", base=m, carry_files=carried)
 
     def repartition_layout(
         self,
@@ -1337,9 +1309,8 @@ class ManagedTable:
         snapshot shares the manifest's single spec. Prior versions
         keep their old layout and stay time-travelable. OCC-pinned
         like compact()."""
-        v = self.latest_version()
-        df = self.read(spark, v)
-        m = self.manifest(v)
+        m = self.manifest()
+        df = self._read_snapshot(spark, m)
         pby = list(partition_by or [])
         fields = _spec_fields(pby)
         missing = [f.source for f in fields if f.source not in df.columns]
@@ -1348,39 +1319,10 @@ class ManagedTable:
                 f"partition source columns {missing} absent from table"
             )
         staged = self._stage(df, partition_by=pby or None,
-                             bloom_filters=m.get("bloom_filters") or None)
-        version = v + 1
-        self._commit(version, {
-            "version": version,
-            "ts": time.time(),
-            "operation": f"repartition[{','.join(pby) or 'none'}]",
-            "schema": m["schema"],
-            "partition_by": pby,
-            "constraints": m.get("constraints") or {},
-            "bloom_filters": m.get("bloom_filters") or [],
-            "add": staged,
-            "remove": [f["name"] for f in m["files"]],
-        })
-        return version
-
-    def _metadata_commit(self, operation: str,
-                         constraints: dict[str, str]) -> int:
-        """Commit a file-less action that only changes table metadata
-        (constraint add/drop): the snapshot's files are untouched."""
-        m = self.manifest()
-        version = m["version"] + 1
-        self._commit(version, {
-            "version": version,
-            "ts": time.time(),
-            "operation": operation,
-            "schema": m["schema"],
-            "partition_by": m.get("partition_by") or [],
-            "constraints": constraints,
-            "bloom_filters": m.get("bloom_filters") or [],
-            "add": [],
-            "remove": [],
-        })
-        return version
+                             bloom_filters=m["bloom_filters"] or None)
+        return self._publish(
+            m, f"repartition[{','.join(pby) or 'none'}]", staged,
+            [f["name"] for f in m["files"]], partition_by=pby)
 
     def add_check_constraint(self, spark: SparkSession, name: str,
                              predicate: str) -> int:
@@ -1388,24 +1330,20 @@ class ManagedTable:
         EXISTING snapshot is validated first (one scan — the
         documented cost), then the constraint lands as a metadata-only
         commit and gates every future write/merge/update."""
-        cons = self.check_constraints()
-        if name in cons:
+        m = self.manifest()
+        if name in m["constraints"]:
             raise ValueError(f"constraint {name!r} already exists")
-        self._enforce_constraints(self.read(spark), {name: predicate})
-        cons[name] = predicate
-        return self._metadata_commit("add_constraint", cons)
+        self._enforce_constraints(self._read_snapshot(spark, m),
+                                  {name: predicate})
+        return self._publish(m, "add_constraint", [], [],
+                             constraints={**m["constraints"], name: predicate})
 
     def drop_check_constraint(self, name: str) -> int:
-        cons = self.check_constraints()
-        if name not in cons:
+        m = self.manifest()
+        if name not in m["constraints"]:
             raise ValueError(f"no constraint {name!r} on {self.path}")
-        del cons[name]
-        return self._metadata_commit("drop_constraint", cons)
-
-    def _action(self, version: int) -> dict:
-        with open(os.path.join(self.log_dir,
-                               _MANIFEST_FMT.format(version))) as fh:
-            return json.load(fh)
+        cons = {k: v for k, v in m["constraints"].items() if k != name}
+        return self._publish(m, "drop_constraint", [], [], constraints=cons)
 
     def changes_between(self, spark: SparkSession, since_version: int,
                         to_version: int | None = None,
@@ -1422,8 +1360,6 @@ class ManagedTable:
         are diffed by ``keys`` (one full-outer join on the key
         columns): at 100 TB prefer narrowing the versions so ticks hit
         the append-only path."""
-        from pyspark.sql import functions as F  # noqa: PLC0415
-
         to_v = self.latest_version() if to_version is None else to_version
         if since_version > to_v:
             raise ValueError(f"since {since_version} > to {to_v}")
@@ -1437,17 +1373,16 @@ class ManagedTable:
                 f"(oldest retained: {min(avail) if avail else 'none'}); "
                 "reset the cursor and bootstrap from the current "
                 "snapshot (TableChangeFeed.reset)")
-        schema = T.StructType.fromJson(self.manifest(to_v)["schema"])
-        pby = bool(self.partition_by(to_v))
-        actions = [self._action(v)
+        m = self.manifest(to_v)
+        schema = _schema(m)
+        actions = [self._load(_MANIFEST_FMT.format(v))
                    for v in range(since_version + 1, to_v + 1)]
         if all(not a.get("remove") for a in actions):
             parts = []
             for a in actions:
                 if not a.get("add"):
                     continue
-                part = self._read_files(spark, a["add"], schema,
-                                        partitioned=pby)
+                part = self._read_snapshot(spark, m, a["add"])
                 parts.append(part.select(
                     "*",
                     F.lit("insert").alias("_change_type"),
@@ -1468,7 +1403,7 @@ class ManagedTable:
                 "commits in range rewrote files; pass keys=[...] to diff "
                 "the snapshots row-wise")
         old = self.read(spark, since_version)
-        new = self.read(spark, to_v)
+        new = self._read_snapshot(spark, m)
         for f in schema.fields:       # schema evolution: null-fill old
             if f.name not in old.columns:
                 old = old.withColumn(f.name, F.lit(None).cast(f.dataType))
@@ -1503,20 +1438,12 @@ class ManagedTable:
         mistaken commits stay auditable and time-travelable). Data
         files are re-referenced, not copied: the action removes the
         current file set and re-adds the old one."""
-        cur = self.latest_version()
+        cur = self.manifest()
         old = self.manifest(version)
-        cur_files = [f["name"] for f in self.manifest(cur)["files"]]
-        new_version = cur + 1
-        self._commit(new_version, {
-            "version": new_version,
-            "ts": time.time(),
-            "operation": f"restore[v{version}]",
-            "schema": old["schema"],
-            "partition_by": old.get("partition_by") or [],
-            "add": old["files"],
-            "remove": cur_files,
-        })
-        return new_version
+        return self._publish(
+            cur, f"restore[v{version}]", old["files"],
+            [f["name"] for f in cur["files"]],
+            **{k: old[k] for k in _META_KEYS})
 
     def merge_with_retry(
         self,
@@ -1602,7 +1529,7 @@ class ManagedTable:
                     )
         protected = False
         for fname in data_files:
-            full = os.path.join(self.data_dir, *fname.split("/"))
+            full = self._data_path(fname)
             if fname in referenced or not os.path.isfile(full):
                 continue
             if now - os.path.getmtime(full) < min_age_seconds:
